@@ -7278,7 +7278,7 @@ IVF_TOPK = 3
 def _ann_ivf_topk(spark, sf):
     from pyspark.sql import Window as W
 
-    from deepee_spark.operators.similarity import assign_cells, unrolled_dot
+    from deepee_spark.operators.similarity import assign_cells
 
     emb = _t(spark, sf, "embeddings")
     cent = emb.filter(F.col("vec_id") < IVF_K).select(
@@ -7292,10 +7292,7 @@ def _ann_ivf_topk(spark, sf):
     assigned = assign_cells(
         emb.select(F.col("vec_id").alias("pid"), F.col("embedding").alias("v")),
         cent.select("c_id", F.col("c_emb").alias("cent")),
-        lambda v, cv: F.round(
-            unrolled_dot(v, cv) if isinstance(cv, list)
-            else _dot(F.col(v), cv), 6
-        ),
+        lambda v, cv: F.round(_dot(v, cv), 6),
     ).select(
         F.col("pid").alias("vec_id"),
         F.col("v").alias("embedding"),
@@ -9303,20 +9300,24 @@ FROM (SELECT DISTINCT user_id % 12 AS hn FROM events) WHERE hn % 2 = 0
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # NOTE on ordering: the driver evaluates only the FIRST 50 entries
-    # of this dict per round.  r01-r04 hard-verified 150 distinct
-    # queries; positions 1-50 below are drawn ONLY from entries with NO
-    # driver-side CORRECTNESS row yet (r4 verdict task 1): the final 49
-    # never-driver-green entries plus the new round-5 adaptive-salt
-    # composition at slot 50.  Positions 51-53 hold the other three
-    # NEW round-5 queries (batch-replay rows); everything after is
-    # already driver-green.  tools/check_contract.py still verifies
-    # ALL entries locally each round.
+    # of this dict per round, so every entry with no driver-side
+    # CORRECTNESS row yet must sit inside that window, at its head
+    # (tests/test_contract_surface.py enforces it).  Slots 1-4 hold
+    # the four round-5 queries the driver has never checked; slots
+    # 5-54 are the round-5 window (driver-green in r05); everything
+    # after is driver-green from earlier rounds.  tools/check_contract.py
+    # still verifies ALL entries locally each round.
     return {
-        # -- window 1-50 (round-5 rotation, r4 verdict task 1): the
-        #    final 49 entries with no driver-side CORRECTNESS row yet
-        #    (all judge-green in r4) in their r4 candidate order, plus
-        #    the NEW adaptive-salt composition at slot 50 — after this
-        #    round every pre-r5 entry has a driver-green row --
+        # -- slots 1-4: round-5 batch-replay rows (r4 verdict task 7)
+        #    and the adaptive politeness composition, never
+        #    driver-checked --
+        "cep_funnel_replay": _cep_funnel_replay,
+        "politeness_replay": _politeness_replay,
+        "stream_dedup_replay": _stream_dedup_replay,
+        "politeness_adaptive": _politeness_adaptive,
+        # -- slots 5-54: the round-5 window (r4 verdict task 1): the
+        #    final 49 entries without a driver row in r4, plus the
+        #    adaptive-salt composition — all driver-green in r05 --
         "bpe_fertility": _bpe_fertility,
         "w1_joint_pr_curve": _w1_joint_pr_curve,
         "kmeans_cells": _kmeans_cells,
@@ -9366,16 +9367,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_containment": _dedup_containment,
         "dedup_cluster_keep": _dedup_cluster_keep,
         "kg_neighborhood_fn": _kg_neighborhood_fn,
-        # slot 50: NEW in round 5 — the measure->size->join adaptive
+        # slot 54: NEW in round 5 — the measure->size->join adaptive
         # salting composition (r4 verdict task 8)
         "j12_planned_salt": _j12_planned_salt,
-        # -- positions 51-53: NEW round-5 batch-replay rows (r4 verdict
-        #    task 7; never driver-checked — tools/check_contract.py
-        #    verifies them locally each round, as it does all entries) --
-        "cep_funnel_replay": _cep_funnel_replay,
-        "politeness_replay": _politeness_replay,
-        "stream_dedup_replay": _stream_dedup_replay,
-        "politeness_adaptive": _politeness_adaptive,
         # -- driver-green in r04 (the r4 window, all green) --
         "openie_triples": _openie_triples,
         "kg_scc": _kg_scc,

@@ -1,4 +1,6 @@
-"""Featurization as pure column expressions (SURVEY.md §2.8, SC9-SC12).
+"""Featurization as pure column expressions (SURVEY.md §2.8: J1 vocab
+lookup, mention detection, SC11 part masks; SC9 padding happens in the
+kernels' batch-max _pad_matrix).
 
 Everything here stays inside whole-stage codegen — no Python. The kernel
 UDFs receive ready-made integer arrays (the AD-DMBERT columnar data model,
@@ -12,7 +14,6 @@ from pyspark.sql import functions as F
 
 from ..kernels.weights import UNK, kernel_vocab
 from ..ontology import ENTITY_GAZETTEER
-from ..segment import CUTOFF
 
 
 def vocab_map_literal() -> Column:
@@ -49,21 +50,6 @@ def mention_positions(tokens: Column) -> Column:
     return F.filter(idx, lambda s: F.element_at(gmap, s["surface"]).isNotNull())
 
 
-def pad_to(col: Column, length: int = CUTOFF, pad: int = 0) -> Column:
-    """SC9 pad/truncate: slice(concat(col, repeat(pad)), 1, L)."""
-    return F.slice(
-        F.concat(col, F.array_repeat(F.lit(pad), length)), 1, length
-    )
-
-
-def relative_positions(length: Column, anchor: Column, offset: int = 79) -> Column:
-    """SC10: i - anchor + offset for i in 0..length-1 (DMCNN's +79 shift,
-    tensor_trigger.py:113-115)."""
-    return F.transform(
-        F.sequence(F.lit(0), length - 1), lambda i: i - anchor + F.lit(offset)
-    )
-
-
 def part_masks(length: Column, split_pos: Column) -> Column:
     """SC11 two-part pooling masks: struct(maskL, maskR) with
     maskL_i = 1.0 if i <= p else 0.0 (DataFormat.md:54-76)."""
@@ -75,23 +61,6 @@ def part_masks(length: Column, split_pos: Column) -> Column:
         F.transform(
             seq, lambda i: F.when(i > split_pos, F.lit(1.0)).otherwise(F.lit(0.0))
         ).alias("maskR"),
-    )
-
-
-def lexical_window(ids: Column, anchor: Column, pad: int = 0) -> Column:
-    """SC12: word ids at {t-1, t, t+1} with boundary pad (DMCNN.py:56-59).
-
-    element_at is 1-based (and rejects 0); anchor is 0-based."""
-
-    def at(one_based: Column) -> Column:
-        return F.when(
-            one_based >= 1, F.element_at(ids, one_based)
-        ).otherwise(F.lit(pad))
-
-    return F.array(
-        F.coalesce(at(anchor), F.lit(pad)),  # t-1
-        F.coalesce(at(anchor + 1), F.lit(pad)),  # t
-        F.coalesce(at(anchor + 2), F.lit(pad)),  # t+1
     )
 
 

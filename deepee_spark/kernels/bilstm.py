@@ -118,24 +118,3 @@ def viterbi_decode(emissions: np.ndarray, transitions: np.ndarray) -> np.ndarray
         path[:, t - 1] = back[np.arange(B), t, path[:, t]]
     return path
 
-
-def decode_roles_viterbi(ids, lengths, event_ids, arg_pos,
-                         transitions: np.ndarray | None = None):
-    """decode_roles with an optional CRF transition matrix.
-
-    Candidates are scored one position at a time (emissions (B, 1, R)),
-    so a first-order transition matrix CANNOT change the decoded path —
-    length-1 Viterbi is exactly the emission argmax. The parameter is
-    kept for API parity with the reference's CRF head and still flows
-    through viterbi_decode (so the recurrence is exercised), but both
-    branches return identical roles and use the same softmax confidence
-    normalization."""
-    logits = score_roles(ids, lengths, event_ids, arg_pos)  # (B, R)
-    sm = logits - logits.max(axis=1, keepdims=True)
-    np.exp(sm, out=sm)
-    sm /= sm.sum(axis=1, keepdims=True)
-    if transitions is None:
-        role = sm.argmax(axis=1)
-    else:
-        role = viterbi_decode(logits[:, None, :], transitions)[:, 0]
-    return role, sm[np.arange(len(role)), role]

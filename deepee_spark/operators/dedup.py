@@ -588,7 +588,7 @@ def semantic_dedup(
     per-cell gemm cogroup — quadratic only within a cell, so the
     codebook size is the knob that bounds cell population exactly as
     in the paper (|cell| ~ N/k). Returns (id, cell:bigint, kept)."""
-    from .similarity import assign_cells, dot as _dot_expr, unrolled_dot
+    from .similarity import assign_cells, dot as _dot_expr
 
     c_id, c_vec = centroids.columns[0], centroids.columns[1]
     assigned = assign_cells(
@@ -596,11 +596,7 @@ def semantic_dedup(
         centroids.select(
             F.col(c_id).alias("c_id"), F.col(c_vec).alias("cent")
         ),
-        lambda v, cv: F.round(
-            unrolled_dot(v, cv) if isinstance(cv, list)
-            else _dot_expr(F.col(v), cv, dim),
-            6,
-        ),
+        lambda v, cv: F.round(_dot_expr(v, cv, dim), 6),
     )
     pairs = embedding_dup_pairs(
         assigned,
@@ -695,7 +691,7 @@ def semantic_dedup_drop(
     import numpy as np
     import pandas as pd
 
-    from .similarity import assign_cells, dot as _dot_expr, unrolled_dot
+    from .similarity import assign_cells, dot as _dot_expr
 
     c_id, c_vec = centroids.columns[0], centroids.columns[1]
     cent = centroids.select(
@@ -706,11 +702,7 @@ def semantic_dedup_drop(
         return assign_cells(
             df.select(F.col(id_col).alias("pid"), F.col(vec_col).alias("v")),
             cent,
-            lambda v, cv: F.round(
-                unrolled_dot(v, cv) if isinstance(cv, list)
-                else _dot_expr(F.col(v), cv, dim),
-                6,
-            ),
+            lambda v, cv: F.round(_dot_expr(v, cv, dim), 6),
         )
 
     drop_a = assign(drop)

@@ -44,29 +44,6 @@ def tuple_set_prf(
     }
 
 
-def prf_by_group(
-    pred: DataFrame, gold: DataFrame, keys: list[str], group: str
-) -> DataFrame:
-    """Per-group P/R/F1 as a DataFrame (A3 as a relational aggregate)."""
-    p = pred.select(group, *keys).distinct().withColumn("_p", F.lit(1))
-    g = gold.select(group, *keys).distinct().withColumn("_g", F.lit(1))
-    full = p.join(g, [group, *keys], "full_outer")
-    return full.groupBy(group).agg(
-        F.sum(F.coalesce("_p", F.lit(0))).alias("n_pred"),
-        F.sum(F.coalesce("_g", F.lit(0))).alias("n_gold"),
-        F.sum(
-            F.when(F.col("_p").isNotNull() & F.col("_g").isNotNull(), 1).otherwise(0)
-        ).alias("n_correct"),
-    ).select(
-        group,
-        "n_pred",
-        "n_gold",
-        "n_correct",
-        (F.col("n_correct") / F.col("n_pred")).alias("precision"),
-        (F.col("n_correct") / F.col("n_gold")).alias("recall"),
-    )
-
-
 def identification_classification_prf(
     pred: DataFrame,
     gold: DataFrame,

@@ -425,45 +425,17 @@ def sparse_topk(
     )
 
 
-def unrolled_dot(v_name: str, cent_values) -> "F.Column":
-    """Sum_i v[i] * cent_i as a PURE arithmetic expression over a
-    collected centroid: a left fold in the exact order (and with the
-    exact double casts) of ``dot()``'s aggregate, so the result is
-    bit-identical — but with NO higher-order functions, the projection
-    stays inside whole-stage codegen. Measured at sf0.1: the
-    aggregate/zip_with formulation pays ~1 microsecond of interpreted
-    lambda dispatch per element and ran ~7x slower than this unroll.
-
-    Built as ONE F.expr SQL string, not Column-by-Column arithmetic:
-    each Python-side `+`/`*` is a py4j round-trip, and k x dim of them
-    cost ~1-3 s of DRIVER time per plan build (measured) — the string
-    parses JVM-side in one call. Centroid literals ride through
-    CAST('<repr>' AS DOUBLE): shortest-repr round-trips IEEE doubles
-    exactly. ``v_name`` is the vector COLUMN NAME (assign_cells fixes
-    it to 'v'); left-assoc SQL `+` reproduces the fold order."""
-    terms = "".join(
-        f" + CAST(element_at({v_name}, {i + 1}) AS DOUBLE)"
-        f" * CAST('{float(c)!r}' AS DOUBLE)"
-        for i, c in enumerate(cent_values)
-    )
-    return F.expr("CAST(0.0 AS DOUBLE)" + terms)
-
-
 def assign_cells(
     base: DataFrame,
     codebook: DataFrame,
     cdot_fn,
-    literal_max_elems: int = 0,
 ) -> DataFrame:
     """Coarse-quantizer cell assignment, shared by lloyd_codebook and
     the SemDeDup family: ``base``(pid, v) x ``codebook``(c_id, cent)
-    -> (pid, v, cell:bigint) by argmax of ``cdot_fn("v", cent)`` with
-    the IVF tie-break (cdot desc, c_id asc). ``cdot_fn`` receives the
-    vector COLUMN NAME (always 'v' — names let the literal path build
-    one F.expr string, see unrolled_dot) and cent as a PYTHON LIST on
-    the literal path or as the joined cent COLUMN on the default path.
+    -> (pid, v, cell:bigint) by argmax of ``cdot_fn(v, cent)`` (both
+    Columns) with the IVF tie-break (cdot desc, c_id asc).
 
-    DEFAULT path: crossJoin(broadcast codebook) + partial-agged
+    crossJoin(broadcast codebook) + partial-agged
     max_by(struct(c_id, v), struct(cdot, -c_id)). The r4-flagged
     crossJoin + row_number()-over-Window shape hash-Exchanged N*k
     EXPANDED rows per call — at 10^12 rows x k=1024 cells three orders
@@ -473,51 +445,17 @@ def assign_cells(
     (per-cell cogroup, groupBy(cell) sums, bucket join) immediately
     shuffles a same-sized relation anyway. Tie-break via the max_by
     ordering struct: max cdot wins, and on a cdot tie the max negated
-    id picks the SMALLEST c_id.
-
-    OPT-IN literal path (``literal_max_elems`` > 0 and k x dim under
-    it): collect the driver-sized codebook and compute the argmax as
-    ONE unrolled projection — zero joins, zero shuffle, zero row
-    expansion (array_max over struct(cdot, -c_id); see unrolled_dot
-    for the codegen-able fold). MEASURED trade-off (BENCH/BASELINE.md
-    §10b, sf0.1): isolated, the unrolled projection is ~4x faster than
-    the join (0.14 s vs 0.6 s); composed into real consumers it is
-    2-4x SLOWER — Catalyst re-inlines the k*dim-term expression into
-    every downstream operator that references ``cell`` (join keys,
-    partitioning expressions, aggregate groupings), re-evaluating and
-    re-compiling it at each site, and each distinct codebook embeds
-    distinct scalar literals so whole-stage codegen caches never hit.
-    Use it only when the assignment output feeds a narrow map (no
-    joins/aggs over ``cell``) or is immediately materialized.
+    id picks the SMALLEST c_id. (A collected-codebook unrolled argmax
+    was measured 2-4x slower once composed into those consumers,
+    BENCH/BASELINE.md §10b, and is not offered.)
     """
     if not codebook.schema["c_id"].dataType.simpleString() in (
         "int", "bigint", "smallint", "tinyint"
     ):
         raise ValueError("assign_cells needs integral c_id")
-    if literal_max_elems > 0:
-        # the codebook collect (a driver action at plan-build time) is
-        # paid ONLY when the caller opted into the literal path
-        rows = sorted(
-            (int(r["c_id"]), list(r["cent"]))
-            for r in codebook.select("c_id", "cent").collect()
-        )
-        if not rows:
-            raise ValueError("empty codebook")
-        if sum(len(c) for _, c in rows) <= literal_max_elems:
-            structs = [
-                F.struct(
-                    cdot_fn("v", cent).alias("cdot"),
-                    F.lit(-cid).cast("long").alias("nid"),
-                )
-                for cid, cent in rows
-            ]
-            best = F.array_max(F.array(*structs))
-            return base.select(
-                "pid", "v", (-best["nid"]).cast("long").alias("cell")
-            )
     joined = base.crossJoin(
         F.broadcast(codebook.select("c_id", "cent"))
-    ).withColumn("cdot", cdot_fn("v", F.col("cent")))
+    ).withColumn("cdot", cdot_fn(F.col("v"), F.col("cent")))
     return (
         joined.groupBy("pid")
         .agg(
@@ -582,24 +520,12 @@ def lloyd_codebook(
         (F.row_number().over(w0) - 1).cast("long").alias("c_id"), "cent"
     )
 
-    def micro_cdot(v_name, cent):
-        if isinstance(cent, list):
-            # collected-codebook unroll as ONE SQL string (py4j-free
-            # build, see unrolled_dot): same products (float x
-            # bigint-typed literal, the zip_with coercion), same
-            # left-fold order from 0.0 — codegen-able, bit-identical
-            terms = "".join(
-                f" + element_at({v_name}, {i + 1})"
-                f" * CAST({int(c)} AS BIGINT)"
-                for i, c in enumerate(cent)
-            )
-            d = F.expr("CAST(0.0 AS DOUBLE)" + terms)
-        else:  # fallback join path: cent is the codebook column
-            d = F.aggregate(
-                F.zip_with(F.col(v_name), cent, lambda a, b: a * b),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
+    def micro_cdot(v, cent):
+        d = F.aggregate(
+            F.zip_with(v, cent, lambda a, b: a * b),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
         return F.round(d / 1_000_000.0, 6)
 
     def assign(cb: DataFrame) -> DataFrame:

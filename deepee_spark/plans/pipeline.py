@@ -11,21 +11,22 @@ Scale design (the part the reference, a single-GPU gallery, never had):
     cross-product, JMEE ee.py:150-172, realized as an explode, SURVEY J6).
   * the html binary column dies at `extracted`; later scans never touch it
     (column pruning verified in tests via ReadSchema).
-  * three extraction modalities read html: prose (`extracted`) and the
-    structured-facts union (`table_facts` = web tables + JSON-LD,
-    facts_from). Each is its own scan of the documents snapshot —
-    Spark does not share file scans across jobs — so 'all' mode reads
-    the html bytes more than once; all scans are narrow and
-    embarrassingly parallel, and in 'kernels'/'final' modes the facts
-    chain is fused into the triples job rather than snapshotted.
+  * three extraction modalities read html: prose (`extracted`, after
+    the url-hash repartition) and the structured-facts union
+    (`table_facts` = web tables + JSON-LD, facts_from, straight off
+    the unshuffled documents in every profile). Each is its own narrow,
+    embarrassingly parallel scan, so the html bytes are read more than
+    once; outside 'all' mode the facts are pinned in memory and consumed
+    by the triples job rather than snapshotted.
   * linking joins are broadcast (alias dict is a dimension table);
     mention-surface memoization bounds the fuzzy LSH join; AQE +
     salted_join handle head-entity skew in canonicalization.
-  * every stage is an atomic snapshot with lineage columns + observed
-    counters; `run(resume=True)` skips stages whose latest snapshot
-    matches the input fingerprint (QAEE's materialized-intermediate
-    pattern — script_args_qa.sh reuses trigger_predictions.json — made
-    systematic).
+  * the DAG is declared once and each durability profile is a policy
+    over it (Pipeline): a snapshot stage is an atomic commit with
+    lineage columns + observed counters, and `run(resume=True)` skips
+    it when its latest snapshot matches the input fingerprint (QAEE's
+    materialized-intermediate pattern — script_args_qa.sh reuses
+    trigger_predictions.json — made systematic).
 
 In production these tables are Iceberg with `days(warc_ts)` /
 `bucket(url)` partition transforms; the sandbox catalog emulates the
@@ -34,6 +35,7 @@ commit semantics on parquet (sources/tables.py).
 
 from __future__ import annotations
 
+import time
 from collections.abc import Iterator
 
 import numpy as np
@@ -482,44 +484,100 @@ def edges_from(triples: DataFrame) -> DataFrame:
     )
 
 
-class Pipeline:
-    """Runs the DAG against a documents DataFrame, checkpointing each
-    stage through a StageCatalog. ``resume=True`` skips current stages.
+def _with_rank_and_degrees(
+    nodes: DataFrame, ranks: DataFrame, edges: DataFrame
+) -> DataFrame:
+    """nodes + PageRank `rank` (ranks(node, rank)) + out/in degree over
+    edges(src, dst); a node missing from either side gets 0."""
+    def degree(end: str, name: str) -> DataFrame:
+        return edges.groupBy(F.col(end).alias("node_id")).agg(
+            F.count(F.lit(1)).cast("long").alias(name)
+        )
 
-    checkpoint:
-      "all"     — every stage is an atomic snapshot (max resume
-                  granularity; the default).
-      "kernels" — snapshot only at the boundaries that buy real resume
-                  value: `documents` (the input pin), `sentences`
-                  (extraction+segmentation+featurize fused — one narrow
-                  chain after the single url-hash shuffle), `arguments`
-                  (trigger+argument kernels fused — the expensive NumPy
-                  compute, also shuffle-free between them), and the
-                  `triples` commit with the gazetteer-bounded tail
-                  (linked/canonical) held in memory via localCheckpoint.
-                  4 commits instead of 8: a killed run still resumes
-                  past every kernel stage, but the `extracted` and
-                  `triggers` intermediates never round-trip through
-                  parquet. Measured motivation (BENCH/BASELINE.md §2-3):
-                  each commit costs a corpus-size-INDEPENDENT ~2.4 s of
-                  job latency plus a data-proportional write+read of the
-                  intermediate — the former bounds strong scaling, the
-                  latter burns shared disk bandwidth.
-      "final"   — flow-through: ONLY the final triples table is
-                  committed; every intermediate stage stays a lazy
-                  DataFrame inside one Spark job graph (arguments is
-                  localCheckpoint-pinned because the tail consumes it
-                  three times). Fault tolerance is Spark's native
-                  task/stage retry — the semantics a one-shot cluster
-                  batch job runs with; durable per-stage snapshots
-                  ("all") are for job-level kill/resume. Resume is
-                  all-or-nothing: a current `triples` snapshot skips
-                  the entire job; anything less recomputes everything.
+    return (
+        nodes.join(ranks.withColumnRenamed("node", "node_id"), "node_id",
+                   "left")
+        .join(degree("src", "out_degree"), "node_id", "left")
+        .join(degree("dst", "in_degree"), "node_id", "left")
+        .select(
+            nodes["*"],
+            *(
+                F.coalesce(c, F.lit(0)).cast("long").alias(c)
+                for c in ("rank", "out_degree", "in_degree")
+            ),
+        )
+    )
+
+
+# v3: facts_from gained JSON-LD triples (round 4) — bumped so a resume
+# against a pre-JSON-LD warehouse re-runs instead of silently skipping on
+# fingerprint match and emitting triples with no ld: facts (v2 was the
+# round-3 web-table bump). run, run_incremental and materialize_graph all
+# fingerprint through stage_fingerprint, so one edit bumps every site.
+FINGERPRINT_VERSION = 3
+
+
+def stage_fingerprint(input_fingerprint: str, stage: str) -> str:
+    return f"{input_fingerprint}/{stage}/v{FINGERPRINT_VERSION}"
+
+
+# What each profile materializes per stage (see Pipeline); a stage a
+# policy does not name is inline.
+_PINS = dict.fromkeys(("table_facts", "linked", "canonical"), "pin")
+POLICIES = {
+    "all": dict.fromkeys(STAGES, "snapshot"),
+    "kernels": {**_PINS, "documents": "snapshot", "sentences": "snapshot",
+                "arguments": "snapshot", "triples": "snapshot"},
+    "final": {**_PINS, "arguments": "pin", "triples": "snapshot"},
+}
+# run_incremental: the 'final' pins; triples are appended, not snapshotted
+INCREMENTAL_POLICY = {**_PINS, "arguments": "pin"}
+
+# crawl-date partitioning on the final table (the days(warc_ts) Iceberg
+# transform, emulated as a parquet partition column): time-range queries
+# over the graph prune whole directories
+_PARTITION_BY = {"triples": ["day"]}
+
+
+class Pipeline:
+    """Runs the DAG against a documents DataFrame through a StageCatalog.
+
+    The DAG is declared once (_stage_table). ``checkpoint`` names the
+    materialization policy run() resolves it under (POLICIES);
+    run_incremental uses INCREMENTAL_POLICY:
+
+      stage        all       kernels   final     run_incremental
+      documents    snapshot  snapshot  inline    inline
+      extracted    snapshot  inline    inline    inline
+      table_facts  snapshot  pin       pin       pin
+      sentences    snapshot  snapshot  inline    inline
+      triggers     snapshot  inline    inline    inline
+      arguments    snapshot  snapshot  pin       pin
+      linked       snapshot  pin       pin       pin
+      canonical    snapshot  pin       pin       pin (canonicalize_incremental)
+      triples      snapshot  snapshot  snapshot  append
+
+    snapshot: an atomic StageCatalog commit, made eagerly in DAG order;
+    ``resume=True`` skips it when its latest commit matches the input
+    fingerprint. pin: localCheckpoint, held in memory for a stage read
+    more than once. inline: a lazy DataFrame fused into its consumer's
+    job. Pins and inline stages are built only when a stage that runs
+    asks for them, so a current snapshot skips its whole upstream; in
+    'final' a current `triples` skips the entire job.
+
+    'all' (the default) resumes at every stage. 'kernels' commits only
+    the input, the fused extraction->featurize chain (narrow after the
+    one url-hash shuffle) and the fused kernels, so a killed run resumes
+    past all NumPy compute while `extracted` and `triggers` never
+    round-trip through parquet: each commit costs a corpus-size-
+    independent ~2.4 s plus a write and read of the data
+    (BENCH/BASELINE.md §2-3). 'final' is flow-through, with Spark's
+    task/stage retry as the fault model.
     """
 
     def __init__(self, spark: SparkSession, catalog: StageCatalog,
                  shuffle_parts: int | None = None, checkpoint: str = "all"):
-        if checkpoint not in ("all", "kernels", "final"):
+        if checkpoint not in POLICIES:
             raise ValueError(f"unknown checkpoint mode {checkpoint!r}")
         self.spark = spark
         self.catalog = catalog
@@ -541,162 +599,83 @@ class Pipeline:
             self.skipped.append(name)
         return df
 
-    def run(self, documents: DataFrame, input_fingerprint: str, resume: bool = True) -> DataFrame:
-        # v3: facts_from gained JSON-LD triples (round 4) — bumped so a
-        # resume against a pre-JSON-LD warehouse re-runs instead of
-        # silently skipping on fingerprint match and emitting triples
-        # with no ld: facts (v2 was the round-3 web-table bump)
-        fp = lambda s: f"{input_fingerprint}/{s}/v3"  # noqa: E731
-        cat, spark = self.catalog, self.spark
-        n_parts = self.shuffle_parts or spark.sparkContext.defaultParallelism
-
-        if self.checkpoint == "final":
-            # one job graph, no intermediate materialization; Catalyst
-            # fuses extraction->segmentation->featurize into the kernel
-            # stages' narrow pipeline. arguments feeds triples_from,
-            # mentions_from_arguments, AND the stage-2 join — pin it
-            # once rather than recompute the kernels three times. The
-            # WHOLE graph (including the eager localCheckpoint pins)
-            # lives inside the build closure so that run(resume=True)
-            # against a current triples snapshot skips all compute, not
-            # just the final write.
-            def build_triples_flow():
-                docs_rep = documents.repartition(n_parts, F.xxhash64("url"))
-                arguments = arguments_from_triggers(
-                    triggers_from_sentences(
-                        featurize_sentences(
-                            sentences_stage(documents_stage(docs_rep))
-                        )
-                    )
-                ).localCheckpoint()
-                facts = facts_from(docs_rep).localCheckpoint()
-                linked = link_mentions(
-                    mentions_from_arguments(arguments)
-                    .select("mention_id", "surface")
-                    .unionByName(mentions_from_tables(facts)),
-                    alias_df(spark),
-                ).localCheckpoint()
-                canonical = canonicalize(linked).localCheckpoint()
-                return triples_from(arguments, linked, canonical).unionByName(
-                    table_triples_out(facts, linked, canonical)
-                )
-
-            return self._stage(
-                "triples",
-                fp("triples"),
-                build_triples_flow,
-                resume,
-                partition_by=["day"],
-            )
-
-        docs = self._stage("documents", fp("documents"), lambda: documents, resume)
-        if self.checkpoint == "kernels":
-            # fused chains: documents->sentences and sentences->arguments
-            # are narrow after the one url-hash shuffle (sortWithinPartitions
-            # and the mention explode stay partition-local), so the extra
-            # commits in "all" mode buy resume granularity, not safety —
-            # here each chain runs as ONE job into one snapshot
-            sentences = self._stage(
-                "sentences",
-                fp("sentences"),
-                lambda: featurize_sentences(
-                    sentences_stage(
-                        documents_stage(
-                            docs.repartition(n_parts, F.xxhash64("url"))
-                        )
-                    )
-                ),
-                resume,
-            )
-            arguments = self._stage(
-                "arguments",
-                fp("arguments"),
-                lambda: arguments_from_triggers(
-                    triggers_from_sentences(sentences)
-                ),
-                resume,
-            )
-            aliases = alias_df(spark)
-
-            # fused tail: one commit instead of three; linked/canonical
-            # are dimension-scale, pinned in memory across their reuses
-            def build_triples():
-                facts = facts_from(docs).localCheckpoint()
-                linked = link_mentions(
-                    mentions_from_arguments(arguments)
-                    .select("mention_id", "surface")
-                    .unionByName(mentions_from_tables(facts)),
-                    aliases,
-                ).localCheckpoint()
-                canonical = canonicalize(linked).localCheckpoint()
-                return triples_from(arguments, linked, canonical).unionByName(
-                    table_triples_out(facts, linked, canonical)
-                )
-
-            return self._stage(
-                "triples", fp("triples"), build_triples, resume,
-                partition_by=["day"],
-            )
-        extracted = self._stage(
-            "extracted",
-            fp("extracted"),
-            lambda: documents_stage(
-                docs.repartition(n_parts, F.xxhash64("url"))
-            ),
-            resume,
+    def _stage_table(self, documents: DataFrame, canonical_build) -> dict:
+        """The DAG, once: stage name -> (input stages, build over their
+        DataFrames), keyed in STAGES (topological) order."""
+        n_parts = (
+            self.shuffle_parts or self.spark.sparkContext.defaultParallelism
         )
-        tfacts = self._stage(
-            "table_facts",
-            fp("table_facts"),
-            lambda: facts_from(docs),
-            resume,
-        )
-        sentences = self._stage(
-            "sentences",
-            fp("sentences"),
-            lambda: featurize_sentences(sentences_stage(extracted)),
-            resume,
-        )
-        triggers = self._stage(
-            "triggers",
-            fp("triggers"),
-            lambda: triggers_from_sentences(sentences),
-            resume,
-        )
-        arguments = self._stage(
-            "arguments",
-            fp("arguments"),
-            lambda: arguments_from_triggers(triggers),
-            resume,
-        )
-        aliases = alias_df(spark)
-        # crawl-date partitioning on the final table (the days(warc_ts)
-        # Iceberg transform, emulated as a parquet partition column):
-        # time-range queries over the graph prune whole directories
-        linked = self._stage(
-            "linked",
-            fp("linked"),
-            lambda: link_mentions(
+
+        def linked(arguments: DataFrame, facts: DataFrame) -> DataFrame:
+            return link_mentions(
                 mentions_from_arguments(arguments)
                 .select("mention_id", "surface")
-                .unionByName(mentions_from_tables(tfacts)),
-                aliases,
+                .unionByName(mentions_from_tables(facts)),
+                alias_df(self.spark),
+            )
+
+        def triples(arguments, linked, canonical, facts) -> DataFrame:
+            return triples_from(arguments, linked, canonical).unionByName(
+                table_triples_out(facts, linked, canonical)
+            )
+
+        return {
+            "documents": ((), lambda: documents),
+            # the one url-hash shuffle: the prose chain through both
+            # kernels is narrow after it
+            "extracted": (("documents",), lambda d: documents_stage(
+                d.repartition(n_parts, F.xxhash64("url"))
+            )),
+            "table_facts": (("documents",), facts_from),
+            "sentences": (("extracted",),
+                          lambda e: featurize_sentences(sentences_stage(e))),
+            "triggers": (("sentences",), triggers_from_sentences),
+            "arguments": (("triggers",), arguments_from_triggers),
+            "linked": (("arguments", "table_facts"), linked),
+            "canonical": (("linked",), canonical_build),
+            "triples": (
+                ("arguments", "linked", "canonical", "table_facts"), triples
             ),
-            resume,
+        }
+
+    def _resolve(self, stages: dict, policy: dict, input_fingerprint: str,
+                 resume: bool) -> DataFrame:
+        """Materialize `stages` under `policy` and return `triples`:
+        snapshot stages commit eagerly in DAG order through _stage;
+        pinned and inline stages are built when a later build asks."""
+        built: dict[str, DataFrame] = {}
+
+        def get(name: str) -> DataFrame:
+            if name in built:
+                return built[name]
+            inputs, build = stages[name]
+            how = policy.get(name, "inline")
+
+            def thunk() -> DataFrame:
+                return build(*map(get, inputs))
+
+            if how == "snapshot":
+                df = self._stage(
+                    name, stage_fingerprint(input_fingerprint, name), thunk,
+                    resume, partition_by=_PARTITION_BY.get(name),
+                )
+            elif how == "pin":
+                df = thunk().localCheckpoint()
+            else:
+                df = thunk()
+            built[name] = df
+            return df
+
+        for name in stages:
+            if policy.get(name) == "snapshot":
+                get(name)
+        return get("triples")
+
+    def run(self, documents: DataFrame, input_fingerprint: str, resume: bool = True) -> DataFrame:
+        return self._resolve(
+            self._stage_table(documents, canonicalize),
+            POLICIES[self.checkpoint], input_fingerprint, resume,
         )
-        canonical = self._stage(
-            "canonical", fp("canonical"), lambda: canonicalize(linked), resume
-        )
-        triples = self._stage(
-            "triples",
-            fp("triples"),
-            lambda: triples_from(arguments, linked, canonical).unionByName(
-                table_triples_out(tfacts, linked, canonical)
-            ),
-            resume,
-            partition_by=["day"],
-        )
-        return triples
 
     def run_incremental(
         self, new_documents: DataFrame, input_fingerprint: str
@@ -720,8 +699,7 @@ class Pipeline:
         rewrite pattern — see streaming/ingest.py's module docstring);
         the changed-mapping set needed to target that rewrite is exactly
         canonicalize_incremental's touched components."""
-        # v3: same JSON-LD bump as run() — see the fp note there
-        fp = f"{input_fingerprint}/triples/v3"
+        fp = stage_fingerprint(input_fingerprint, "triples")
         cat, spark = self.catalog, self.spark
         # history scan, NOT is_current: an append is not idempotent, and
         # a drop replayed after ANY later triples commit (next drop, or
@@ -731,33 +709,20 @@ class Pipeline:
         if cat.was_committed("triples", fp):
             self.skipped.append("triples")
             return cat.read(spark, "triples")
-        n_parts = self.shuffle_parts or spark.sparkContext.defaultParallelism
-        docs_rep = new_documents.repartition(n_parts, F.xxhash64("url"))
-        arguments = arguments_from_triggers(
-            triggers_from_sentences(
-                featurize_sentences(
-                    sentences_stage(documents_stage(docs_rep))
-                )
-            )
-        ).localCheckpoint()
-        facts = facts_from(docs_rep).localCheckpoint()
-        linked = link_mentions(
-            mentions_from_arguments(arguments)
-            .select("mention_id", "surface")
-            .unionByName(mentions_from_tables(facts)),
-            alias_df(spark),
-        ).localCheckpoint()
-        canonical = self.canonicalize_incremental(
-            linked, input_fingerprint
-        ).localCheckpoint()
-        delta = triples_from(arguments, linked, canonical).unionByName(
-            table_triples_out(facts, linked, canonical)
+        # the lambda looks canonicalize_incremental up when it runs, so
+        # an instance-level wrapper of that method still applies
+        stages = self._stage_table(
+            new_documents,
+            lambda linked: self.canonicalize_incremental(
+                linked, input_fingerprint
+            ),
         )
-        import time as _time
-
-        t0 = _time.time()
-        cat.append(delta, "triples", fp, partition_by=["day"])
-        self.stage_seconds["triples+append"] = round(_time.time() - t0, 3)
+        delta = self._resolve(
+            stages, INCREMENTAL_POLICY, input_fingerprint, resume=False
+        )
+        t0 = time.time()
+        cat.append(delta, "triples", fp, partition_by=_PARTITION_BY["triples"])
+        self.stage_seconds["triples+append"] = round(time.time() - t0, 3)
         self.ran.append("triples")
         return cat.read(spark, "triples")
 
@@ -1117,28 +1082,8 @@ class Pipeline:
             minhash_signatures(toks, "url", "tok_set"), "url", bands
         )
 
-        def prior(table: str) -> DataFrame | None:
-            hist = cat.history(table)
-            mine = next(
-                (
-                    i
-                    for i, m in enumerate(hist)
-                    if m.get("fingerprint") == fp
-                ),
-                None,
-            )
-            if mine is not None:
-                if mine == 0:
-                    return None
-                return cat.read(
-                    spark, table, snapshot=hist[mine - 1]["snapshot"]
-                )
-            try:
-                return cat.read(spark, table)
-            except FileNotFoundError:
-                return None
-
-        prior_bands, prior_tokens = prior("mh_bands"), prior("mh_tokens")
+        prior_bands, _ = self._state_before(fp, "mh_bands")
+        prior_tokens, _ = self._state_before(fp, "mh_tokens")
         if prior_bands is None or prior_tokens is None:
             dups = spark.createDataFrame(
                 [], "url string, dup_url string, jaccard double"
@@ -1178,6 +1123,29 @@ class Pipeline:
         if not cat.was_committed("mh_tokens", fp):
             cat.append(toks, "mh_tokens", fp)
         return dups
+
+    def _state_before(
+        self, fingerprint: str, table: str
+    ) -> tuple[DataFrame | None, bool]:
+        """(`table` as it stood before the commit stamped `fingerprint`,
+        whether that commit exists). With no such commit that is the
+        latest snapshot; None when the table was empty then. A replayed
+        drop thus probes exactly the state its first run probed."""
+        cat, spark = self.catalog, self.spark
+        hist = cat.history(table)
+        mine = next(
+            (i for i, m in enumerate(hist)
+             if m.get("fingerprint") == fingerprint),
+            None,
+        )
+        if mine is None:
+            try:
+                return cat.read(spark, table), False
+            except FileNotFoundError:
+                return None, False
+        if mine == 0:
+            return None, True
+        return cat.read(spark, table, snapshot=hist[mine - 1]["snapshot"]), True
 
     def frontier_gate(
         self,
@@ -1222,34 +1190,11 @@ class Pipeline:
         keyed = delta_docs.withColumn("_cu", canonical_url(F.col("url")))
         urls = keyed.select(F.col("_cu").alias("v"))
         fp_bloom = f"{input_fingerprint}/url_bloom/v1"
-        hist = cat.history("url_bloom")
-        mine = next(
-            (
-                i
-                for i, m in enumerate(hist)
-                if m.get("fingerprint") == fp_bloom
-            ),
-            None,
-        )
-        if mine is not None:
-            # replay: probe the pre-merge bitmap (None = this drop was
-            # the first commit, so the seen-set was empty)
-            bitmap = (
-                cat.read(
-                    spark, "url_bloom", snapshot=hist[mine - 1]["snapshot"]
-                ).select("word_idx", "word")
-                if mine > 0
-                else None
-            )
-        else:
-            try:
-                bitmap = cat.read(spark, "url_bloom").select(
-                    "word_idx", "word"
-                )
-            except FileNotFoundError:
-                bitmap = None
+        bitmap, merged = self._state_before(fp_bloom, "url_bloom")
+        if bitmap is not None:
+            bitmap = bitmap.select("word_idx", "word")
         admitted = admit_unseen(keyed, bitmap, m_bits, k)
-        if mine is None:
+        if not merged:
             cat.merge_bitmap(
                 spark, bloom_build(urls, "v", m_bits, k), "url_bloom",
                 fp_bloom,
@@ -1268,19 +1213,18 @@ class Pipeline:
         aggregate-and-write jobs over the final table, never a kernel
         recompute; same fingerprint contract as any stage, so resume
         skips them when current."""
-        # v3: tracks the triples fingerprint bump (JSON-LD facts change
-        # the derived node/edge sets under the same input fingerprint)
-        fp = lambda s: f"{input_fingerprint}/{s}/v3"  # noqa: E731
+        # the triples version: a facts change moves the derived
+        # node/edge sets under the same input fingerprint
         nodes = self._stage(
             "nodes",
-            fp("nodes"),
+            stage_fingerprint(input_fingerprint, "nodes"),
             lambda: nodes_from(triples),
             resume,
             partition_by=["kind"],
         )
         edges = self._stage(
             "edges",
-            fp("edges"),
+            stage_fingerprint(input_fingerprint, "edges"),
             lambda: edges_from(triples),
             resume,
             partition_by=["pred_type"],
@@ -1355,43 +1299,11 @@ class Pipeline:
         from deepee_spark.operators.graph import pagerank_int
 
         def build() -> DataFrame:
-            e = edges.select("subj", "obj")
-            pr = pagerank_int(
-                e.select(
-                    F.col("subj").alias("src"), F.col("obj").alias("dst")
-                ),
-                iters=pagerank_iters,
+            e = edges.select(
+                F.col("subj").alias("src"), F.col("obj").alias("dst")
             )
-            out_deg = e.groupBy("subj").agg(
-                F.count(F.lit(1)).cast("long").alias("out_degree")
-            )
-            in_deg = e.groupBy("obj").agg(
-                F.count(F.lit(1)).cast("long").alias("in_degree")
-            )
-            return (
-                nodes.join(
-                    pr.withColumnRenamed("node", "node_id"), "node_id", "left"
-                )
-                .join(
-                    out_deg.withColumnRenamed("subj", "node_id"),
-                    "node_id",
-                    "left",
-                )
-                .join(
-                    in_deg.withColumnRenamed("obj", "node_id"),
-                    "node_id",
-                    "left",
-                )
-                .select(
-                    nodes["*"],
-                    F.coalesce("rank", F.lit(0)).cast("long").alias("rank"),
-                    F.coalesce("out_degree", F.lit(0))
-                    .cast("long")
-                    .alias("out_degree"),
-                    F.coalesce("in_degree", F.lit(0))
-                    .cast("long")
-                    .alias("in_degree"),
-                )
+            return _with_rank_and_degrees(
+                nodes, pagerank_int(e, iters=pagerank_iters), e
             )
 
         return self._stage(
@@ -1450,37 +1362,7 @@ class Pipeline:
                 e, seed_ranks=seed, tol_units=tol_units,
                 max_iters=max_iters,
             )
-            out_deg = e.groupBy("src").agg(
-                F.count(F.lit(1)).cast("long").alias("out_degree")
-            )
-            in_deg = e.groupBy("dst").agg(
-                F.count(F.lit(1)).cast("long").alias("in_degree")
-            )
-            return (
-                nodes.join(
-                    pr.withColumnRenamed("node", "node_id"), "node_id", "left"
-                )
-                .join(
-                    out_deg.withColumnRenamed("src", "node_id"),
-                    "node_id",
-                    "left",
-                )
-                .join(
-                    in_deg.withColumnRenamed("dst", "node_id"),
-                    "node_id",
-                    "left",
-                )
-                .select(
-                    nodes["*"],
-                    F.coalesce("rank", F.lit(0)).cast("long").alias("rank"),
-                    F.coalesce("out_degree", F.lit(0))
-                    .cast("long")
-                    .alias("out_degree"),
-                    F.coalesce("in_degree", F.lit(0))
-                    .cast("long")
-                    .alias("in_degree"),
-                )
-            )
+            return _with_rank_and_degrees(nodes, pr, e)
 
         return self._stage(
             "node_stats", fp, build, resume, partition_by=["kind"]

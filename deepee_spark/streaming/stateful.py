@@ -182,8 +182,8 @@ def batch_dedup_replay(
 ) -> DataFrame:
     """Batch replay of stream_dedup's group body (_dedup_group) with a
     DETERMINISTIC arrival order: within each key the rows fold in
-    url-ascending order (a live stream's arrival order is not a
-    property of the data, so replay pins a total order — the same
+    (url, fingerprint)-ascending order (a live stream's arrival order
+    is not a property of the data, so replay pins a total order — the same
     contract a re-run of a persisted stream log would give). Emits the
     first occurrence of every (key, fingerprint) with n_seen_before =
     number of distinct fingerprints the key had already emitted.
@@ -196,7 +196,8 @@ def batch_dedup_replay(
     fold)."""
 
     def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(url_col, kind="mergesort")
+        # (url, fingerprint): a total fold order even when urls repeat
+        pdf = pdf.sort_values(["url", "fingerprint"], kind="mergesort")
         out = list(_dedup_group(key, iter([pdf]), _NoState()))
         return (
             pd.concat(out)

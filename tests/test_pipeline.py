@@ -958,11 +958,12 @@ def test_facts_shape_change_requires_fingerprint_bump(spark, tmp_path):
     table_facts instead of silently skipping with stale facts. Nothing
     guarded the NEXT facts change — this pins the (facts semantic
     hash, fingerprint version) PAIR: change facts_from's output on the
-    canonical corpus and this fails until the version in
-    plans/pipeline.py (every `{s}/vN` site, run AND run_incremental)
-    is bumped — at which point update BOTH constants below together.
-    Also pins the mechanism: a catalog stage current at vN must
-    re-run when only the version component changes."""
+    canonical corpus and this fails until FINGERPRINT_VERSION in
+    plans/pipeline.py (the one version run, run_incremental and
+    materialize_graph all fingerprint with) is bumped — at which point
+    update BOTH constants below together. Also pins the mechanism: a
+    catalog stage current at vN must re-run when only the version
+    component changes."""
     import hashlib
     import inspect
     import json
@@ -972,12 +973,40 @@ def test_facts_shape_change_requires_fingerprint_bump(spark, tmp_path):
     from deepee_spark.corpus import corpus_df
     from deepee_spark.sources.tables import StageCatalog
 
-    # (a) every fingerprint site carries the SAME version
-    src = inspect.getsource(pl)
-    versions = re.findall(r"\{s\}/v(\d+)", src)
-    assert len(versions) >= 2, "fingerprint sites moved — update regex"
-    assert len(set(versions)) == 1, f"version skew across sites: {versions}"
+    # (a) every fingerprint site carries the SAME version: drive run
+    # (every profile), run_incremental and materialize_graph against a
+    # catalog that records fingerprints and reports every stage current
+    # (so nothing is built or committed)
+    class Recorder:
+        def __init__(self):
+            self.fps: list[str] = []
+
+        def stage(self, spark, name, fp, build, resume=True,
+                  partition_by=None):
+            self.fps.append(fp)
+            return spark.range(0), False, 0.0
+
+        def was_committed(self, name, fp):
+            self.fps.append(fp)
+            return True
+
+        def read(self, spark, name, snapshot=None):
+            return spark.range(0)
+
+    rec = Recorder()
+    never_read = spark.range(0)
+    for mode in pl.POLICIES:
+        pl.Pipeline(spark, rec, checkpoint=mode).run(never_read, "x")
+    pl.Pipeline(spark, rec).run_incremental(never_read, "x")
+    pl.Pipeline(spark, rec).materialize_graph(never_read, "x")
+    assert len(rec.fps) == 9 + 4 + 1 + 1 + 2, rec.fps
+    versions = [re.fullmatch(r"x/\w+/v(\d+)", fp).group(1) for fp in rec.fps]
+    assert len(set(versions)) == 1, f"version skew across sites: {rec.fps}"
     version = int(versions[0])
+    # ...and no stage fingerprint is spelled out past the shared helper
+    stages = "|".join(pl.STAGES + ["nodes", "edges"])
+    literal = re.findall(rf"/(?:{stages})/v\d", inspect.getsource(pl))
+    assert not literal, literal
 
     # (b) the pinned pair — update together, never separately
     PINNED_VERSION = 3
@@ -990,9 +1019,9 @@ def test_facts_shape_change_requires_fingerprint_bump(spark, tmp_path):
     got_hash = hashlib.sha256("\n".join(rows).encode()).hexdigest()
     assert (version, got_hash) == (PINNED_VERSION, PINNED_FACTS_HASH), (
         "facts_from's output (or schema) changed relative to pipeline "
-        f"fingerprint v{version}. Bump the version at every "
-        "plans/pipeline.py `{s}/vN` site (run AND run_incremental) so "
-        "resumed warehouses re-run the facts stages, THEN update "
+        f"fingerprint v{version}. Bump plans/pipeline.py "
+        "FINGERPRINT_VERSION so resumed warehouses re-run the facts "
+        "stages, THEN update "
         "PINNED_VERSION and PINNED_FACTS_HASH here together. "
         f"got: ({version}, {got_hash})"
     )

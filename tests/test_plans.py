@@ -932,35 +932,27 @@ def test_codebook_assignment_no_expanded_shuffle_and_path_parity(spark):
     crossJoin + row_number shape paid. DEFAULT path: broadcast cross
     join + partial-agged max_by — exactly ONE shuffle Exchange, on
     pid, AFTER the partial agg collapsed the k fan-out (~N rows), and
-    NO Window. OPT-IN literal path (BENCH/BASELINE.md §10b documents
-    when it wins): zero Exchange, zero joins, zero Window. Both paths
-    must agree row-for-row."""
+    NO Window. The assignment must agree row-for-row with a brute-force
+    argmax (cdot desc, c_id asc)."""
     import re
 
     from pyspark.sql import functions as F
 
-    from deepee_spark.operators.similarity import (
-        assign_cells,
-        dot,
-        unrolled_dot,
-    )
+    from deepee_spark.operators.similarity import assign_cells, dot
 
     dim = 4
+    vecs = [[float(i % 5), 1.0, float(i % 3), 0.5] for i in range(40)]
+    cents = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 1.0, 0.0],
+             [0.5, 0.5, 0.5, 0.5]]
     base = spark.createDataFrame(
-        [(i, [float(i % 5), 1.0, float(i % 3), 0.5]) for i in range(40)],
-        "pid long, v array<float>",
+        list(enumerate(vecs)), "pid long, v array<float>"
     )
     cb = spark.createDataFrame(
-        [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 1.0, 0.0]),
-         (2, [0.5, 0.5, 0.5, 0.5])],
-        "c_id long, cent array<float>",
+        list(enumerate(cents)), "c_id long, cent array<float>"
     )
 
     def cdot(v, c):
-        # list on the literal path, Column on the default join path
-        return F.round(
-            unrolled_dot(v, c) if isinstance(c, list) else dot(v, c, dim), 6
-        )
+        return F.round(dot(v, c, dim), 6)
 
     default = assign_cells(base, cb, cdot)
     plan = formatted_plan(default)
@@ -973,15 +965,14 @@ def test_codebook_assignment_no_expanded_shuffle_and_path_parity(spark):
     assert "hashpartitioning(pid" in plan, plan
     assert "partial_max_by" in plan, plan
 
-    lit_path = assign_cells(base, cb, cdot, literal_max_elems=65_536)
-    lit_plan = formatted_plan(lit_path)
-    assert "Exchange" not in lit_plan, lit_plan
-    assert "Window" not in lit_plan, lit_plan
-    assert "NestedLoop" not in lit_plan, lit_plan
-
-    a = sorted((r["pid"], r["cell"]) for r in lit_path.collect())
-    b = sorted((r["pid"], r["cell"]) for r in default.collect())
-    assert a == b
+    # every product and sum is exact in binary at these values
+    want = sorted(
+        (pid, min(range(len(cents)),
+                  key=lambda c: (-sum(a * b for a, b in zip(v, cents[c])), c)))
+        for pid, v in enumerate(vecs)
+    )
+    got = sorted((r["pid"], r["cell"]) for r in default.collect())
+    assert got == want
 
 
 def test_planned_salt_k_flows_from_measured_skew(spark):

@@ -679,20 +679,27 @@ def test_batch_politeness_replay_equals_batch_operator(spark):
 
 def test_batch_dedup_replay_keep_first_by_url_order(spark):
     """batch_dedup_replay: first occurrence per (key, fingerprint) in
-    url-ascending fold order; n_seen_before counts the key's earlier
-    distinct fingerprints. Python closed-form twin."""
+    (url, fingerprint)-ascending fold order; n_seen_before counts the
+    key's earlier distinct fingerprints. Python closed-form twin. Rows
+    sharing (key, url) fold by fingerprint, so the output does not
+    depend on input order."""
     from deepee_spark.streaming.stateful import batch_dedup_replay
 
     rows = [
         ("k1", 7, "b"), ("k1", 7, "a"), ("k1", 9, "c"),
         ("k2", 7, "z"), ("k1", 9, "d"),
+        ("k3", 5, "m"), ("k3", 3, "m"), ("k3", 5, "n"),
     ]
-    df = spark.createDataFrame(
-        rows, "key string, fingerprint long, url string"
-    )
-    got = sorted(map(tuple, batch_dedup_replay(df).collect()))
+    outs = []
+    for ordered in (rows, rows[::-1]):
+        df = spark.createDataFrame(
+            ordered, "key string, fingerprint long, url string"
+        )
+        outs.append(sorted(map(tuple, batch_dedup_replay(df).collect())))
+    assert outs[0] == outs[1]
     # k1 folds a,b,c,d: fp7 first at 'a' (0 before), fp9 first at 'c'
-    # (1 before); k2: fp7 at 'z'
-    assert got == [
+    # (1 before); k2: fp7 at 'z'; k3 folds (m,3),(m,5),(n,5)
+    assert outs[0] == [
         ("k1", 7, "a", 0), ("k1", 9, "c", 1), ("k2", 7, "z", 0),
+        ("k3", 3, "m", 0), ("k3", 5, "m", 1),
     ]
