@@ -1887,21 +1887,10 @@ FROM documents GROUP BY 1
 
 
 def _minhash_sig(spark, sf):
-    docs = _t(spark, sf, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(F.array_distinct(_tokens())).alias("token")
-    )
-    h = _str_hash(F.col("token"))
-    hashed = toks.select(
-        "doc_id",
-        *[
-            ((F.lit(a) * h + F.lit(b)) % F.lit(MOD)).alias(f"m{k}")
-            for k, (a, b) in enumerate(_MH)
-        ],
-    )
-    return hashed.groupBy("doc_id").agg(
-        *[F.min(f"m{k}").alias(f"sig{k}") for k in range(MINHASH_K)]
-    )
+    from deepee_spark.operators.dedup import minhash_signatures
+
+    docs = _t(spark, sf, "documents").select("doc_id", _tokens().alias("toks"))
+    return minhash_signatures(docs, "doc_id", "toks", k=MINHASH_K)
 
 
 _MINHASH_SQL = f"""

@@ -4,11 +4,12 @@ All DataFrame-native (no Python UDFs); each returns a DataFrame so the
 caller composes them into the DAG. Web-scale notes per operator:
 
   exact_duplicates      one shuffle on md5(text); partial agg upstream
-  minhash_signatures    explode(tokens) -> K min-aggregations; the explode
-                        is narrow, the groupBy is the only shuffle
+  minhash_signatures    one fold over a row's distinct token hashes
+                        keeps the K running minima: narrow, no shuffle
   minhash_dup_pairs     banded LSH: candidates meet only inside
-                        (band, band_key) buckets -> no quadratic join
-  simhash               same shape as minhash (explode + sum aggs)
+                        (band, band_key) buckets -> no quadratic join;
+                        the B band rows are one transform + explode
+  simhash               explode(tokens) + bit-sum aggregations
   ngram_jaccard_pairs   bounded by a blocking key (lang, length bucket) —
                         never run unblocked at scale
   embedding_dup_pairs   cosine pairs; DEFAULT blocking is hyperplane-LSH
@@ -56,20 +57,23 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 def minhash_signatures(
     df: DataFrame, id_col: str, tokens_col: str, k: int = MINHASH_K
 ) -> DataFrame:
-    """-> (id, sig0..sig{k-1}) MinHash over distinct tokens."""
-    toks = df.select(
-        id_col, F.explode(F.array_distinct(F.col(tokens_col))).alias("token")
+    """-> (id, sig0..sig{k-1}) MinHash over distinct tokens, signed row
+    by row with no shuffle. Precondition: one row per id (a repeated id
+    gets one signature row per input row). Rows without tokens emit
+    nothing."""
+    a = F.lit([ak for ak, _ in _MH[:k]])
+    b = F.lit([bk for _, bk in _MH[:k]])
+    sig = F.aggregate(
+        F.transform(F.array_distinct(F.col(tokens_col)), str_hash),
+        F.array_repeat(F.lit((1 << 63) - 1), k),
+        lambda acc, h: F.transform(
+            acc, lambda m, i: F.least(m, (a[i] * h + b[i]) % F.lit(MOD))
+        ),
     )
-    h = str_hash(F.col("token"))
-    hashed = toks.select(
-        id_col,
-        *[
-            ((F.lit(a) * h + F.lit(b)) % F.lit(MOD)).alias(f"m{i}")
-            for i, (a, b) in enumerate(_MH[:k])
-        ],
-    )
-    return hashed.groupBy(id_col).agg(
-        *[F.min(f"m{i}").alias(f"sig{i}") for i in range(k)]
+    return (
+        df.filter(F.size(F.col(tokens_col)) > 0)
+        .select(id_col, sig.alias("_sig"))
+        .select(id_col, *[F.col("_sig")[i].alias(f"sig{i}") for i in range(k)])
     )
 
 
@@ -94,29 +98,13 @@ def minhash_dup_pairs(
     are identical either way (same signatures bucket together) modulo
     xxhash64 collisions.
     """
-    rows = k // bands
     sigs = minhash_signatures(df, id_col, tokens_col, k)
-    if portable_bands:
-        def _key(b):
-            return F.concat_ws(
-                "_", *[F.col(f"sig{b * rows + r}") for r in range(rows)]
-            )
-    else:
-        def _key(b):
-            return F.xxhash64(
-                *[F.col(f"sig{b * rows + r}") for r in range(rows)]
-            )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                _key(b).cast("string").alias("band_key"),
-            )
-            for b in range(bands)
-        ]
-    )
-    banded = sigs.select(id_col, F.explode(band_structs).alias("bk")).select(
-        F.col(id_col).alias("bid"), "bk.band", "bk.band_key"
+    # xxhash64 keys are engine-native; portable keys are the plain
+    # concatenation of the band's signature values (wider, but any
+    # engine can reproduce them)
+    key = (lambda *c: F.concat_ws("_", *c)) if portable_bands else F.xxhash64
+    banded = _banded(sigs, id_col, bands, k, key).withColumnRenamed(
+        id_col, "bid"
     )
     cand = (
         banded.alias("x")
@@ -536,21 +524,24 @@ def band_rows(
     The index shape the cross-drop incremental dedup accumulates
     (plans/pipeline.dedup_drop_against_history) — one row per (doc,
     band), joinable on (band, band_key)."""
+    return _banded(sigs, id_col, bands, k, F.xxhash64)
+
+
+def _banded(sigs: DataFrame, id_col: str, bands: int, k: int, key) -> DataFrame:
+    """(id, band, band_key string) rows from one transform over the band
+    indices; ``key`` maps a band's signature values to its bucket key."""
     rows = k // bands
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    *[F.col(f"sig{b * rows + r}") for r in range(rows)]
-                ).cast("string").alias("band_key"),
-            )
-            for b in range(bands)
-        ]
+    sig = F.array(*[F.col(f"sig{i}") for i in range(k)])
+    structs = F.transform(
+        F.sequence(F.lit(0), F.lit(bands - 1)),
+        lambda b: F.struct(
+            b.alias("band"),
+            key(
+                *[F.element_at(sig, b * rows + r + 1) for r in range(rows)]
+            ).cast("string").alias("band_key"),
+        ),
     )
-    return sigs.select(id_col, F.explode(band_structs).alias("bk")).select(
-        id_col, "bk.band", "bk.band_key"
-    )
+    return sigs.select(id_col, F.inline(structs))
 
 
 def semantic_dedup(

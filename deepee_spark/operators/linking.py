@@ -10,12 +10,15 @@ Two paths, both DataFrame-native (no Python UDFs):
      exact n-gram Jaccard verification and best-candidate selection with a
      deterministic tie-break (jaccard desc, prior desc, entity_id asc).
 
-MinHash is computed with xxhash64(shingle, seed_i) — element-wise min per
-seed via groupBy, entirely in expressions. At corpus scale both sides of
-the LSH join are shuffled on the band key; mention-side skew is bounded
-because signatures of identical surfaces collide into the same buckets —
-we dedupe surfaces *before* the fuzzy join and re-expand after (surface-
-level memoization, the classic web-scale trick).
+MinHash is xxhash64(gram, i) minimized over a row's distinct grams by
+one fold per row (no explode, no groupBy: signing and banding are
+narrow); the B band rows come from one transform + explode. With the
+dictionary broadcast, its band rows broadcast too, so blocking,
+verification and the best-alias pick run in the partitioning of the
+distinct mention surfaces; otherwise both sides of the LSH join are
+shuffled on the band key. Mention-side skew is bounded because we
+dedupe surfaces *before* the fuzzy join and re-expand after
+(surface-level memoization).
 """
 
 from __future__ import annotations
@@ -52,41 +55,34 @@ def char_ngrams(col, n: int = 3):
 
 
 def minhash_signature(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """-> (id_col, sig array<bigint> of N_HASHES mins)."""
-    grams = df.select(
-        id_col, F.explode(char_ngrams(F.col(text_col))).alias("gram")
+    """-> (id_col, sig array<bigint> of N_HASHES mins), signed row by row
+    with no shuffle. Precondition: one row per id (a repeated id gets one
+    signature row per input row). Rows without grams emit nothing."""
+    g = char_ngrams(F.col(text_col))
+    sig = F.aggregate(
+        g,
+        F.array_repeat(F.lit((1 << 63) - 1), N_HASHES),
+        lambda acc, x: F.transform(acc, lambda m, i: F.least(m, F.xxhash64(x, i))),
     )
-    hashed = grams.select(
-        id_col,
-        *[
-            F.xxhash64(F.col("gram"), F.lit(i)).alias(f"h{i}")
-            for i in range(N_HASHES)
-        ],
-    )
-    agg = hashed.groupBy(id_col).agg(
-        *[F.min(f"h{i}").alias(f"h{i}") for i in range(N_HASHES)]
-    )
-    return agg.select(
-        id_col, F.array(*[f"h{i}" for i in range(N_HASHES)]).alias("sig")
+    return (
+        df.filter(F.size(g) > 0)
+        .select(id_col, sig.alias("_sig"))
+        .select(id_col, F.array(*[F.col("_sig")[i] for i in range(N_HASHES)]).alias("sig"))
     )
 
 
 def lsh_bands(sig_df: DataFrame, id_col: str) -> DataFrame:
     """Explode a signature into (id, band, band_key) rows."""
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    *[F.element_at("sig", b * ROWS_PER_BAND + r + 1) for r in range(ROWS_PER_BAND)]
-                ).alias("band_key"),
-            )
-            for b in range(BANDS)
-        ]
+    bands = F.transform(
+        F.sequence(F.lit(0), F.lit(BANDS - 1)),
+        lambda b: F.struct(
+            b.alias("band"),
+            F.xxhash64(
+                *[F.element_at("sig", b * ROWS_PER_BAND + r + 1) for r in range(ROWS_PER_BAND)]
+            ).alias("band_key"),
+        ),
     )
-    return sig_df.select(id_col, F.explode(bands).alias("bk")).select(
-        id_col, F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key")
-    )
+    return sig_df.select(id_col, F.inline(bands))
 
 
 def link_mentions(
@@ -147,7 +143,15 @@ def link_mentions(
     if not fuzzy:
         return exact
 
-    unmatched = m.join(F.broadcast(a_best), "norm", "left_anti")
+    # a left-join miss nulls every dictionary column; testing all three
+    # keeps column pruning from narrowing this broadcast below the exact
+    # join's, so the dictionary is broadcast once for both
+    dim = F.broadcast(a_best)
+    unmatched = (
+        m.join(dim, m["norm"] == dim["norm"], "left")
+        .filter(dim["norm"].isNull() & dim["entity_id"].isNull() & dim["prior"].isNull())
+        .select(m["*"])
+    )
     # surface-level memoization: fuzzy-link each distinct surface once.
     # The fuzzy branch is built UNCONDITIONALLY — an empty unmatched set
     # flows through the MinHash join as empty relations at negligible
@@ -156,14 +160,17 @@ def link_mentions(
     # "What's wrong" #2).
     surf = unmatched.select(F.col("norm").alias("m_norm")).distinct()
     m_sig = minhash_signature(surf, "m_norm", "m_norm")
-    a_sig = minhash_signature(
-        a.select("norm").distinct().withColumnRenamed("norm", "a_norm"),
-        "a_norm",
-        "a_norm",
-    )
+    # repeated alias norms sign identically and cand is distinct, so the
+    # alias side signs `a` as it stands, with no exchange before it
+    a_norm = a.select(F.col("norm").alias("a_norm"))
+    a_bands = lsh_bands(minhash_signature(a_norm, "a_norm", "a_norm"), "a_norm")
+    if broadcast_aliases:
+        # blocking, verification and the best-alias pick then stay in the
+        # m_norm partitioning of `surf`, with no exchange of their own
+        a_bands = F.broadcast(a_bands)
     cand = (
         lsh_bands(m_sig, "m_norm")
-        .join(lsh_bands(a_sig, "a_norm"), ["band", "band_key"])
+        .join(a_bands, ["band", "band_key"])
         .select("m_norm", "a_norm")
         .distinct()
     )
@@ -177,7 +184,7 @@ def link_mentions(
             / F.size(F.array_union("m_g", "a_g")),
         )
         .filter(F.col("jaccard") >= MIN_JACCARD)
-        .join(a_best.withColumnRenamed("norm", "a_norm"), "a_norm")
+        .join(dim, F.col("a_norm") == dim["norm"])
     )
     best = (
         verified.groupBy("m_norm")

@@ -24,8 +24,8 @@ here is the standard windowed rolling-hash form:
      removable windows into maximal token spans (spans) -- per-doc
      windows only, docs are bounded.
 
-Web-scale notes: the explode emits ~n_tokens rows/doc (same factor as
-minhash_signatures); the whash groupBy partial-aggregates, so hot
+Web-scale notes: the explode emits ~n_tokens rows/doc; the whash
+groupBy partial-aggregates, so hot
 boilerplate windows cost one long per mapper, not a skewed reduce.
 The join back to occurrences re-uses the same key, so AQE coalesces
 it onto the agg's exchange. Integer fractions (dup_frac_e6) keep the

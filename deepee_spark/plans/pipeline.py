@@ -1089,8 +1089,14 @@ class Pipeline:
                 [], "url string, dup_url string, jaccard double"
             )
         else:
+            # explicit-count url repartition of the drop's band rows
+            # (embedding_dup_pairs' rule): candidate pairs and their
+            # verification are CPU-heavy but byte-light, so AQE would
+            # coalesce them into one task; the distinct and the broadcast
+            # joins below keep this partitioning
             cand = (
-                banded.join(
+                banded.repartition(spark.sparkContext.defaultParallelism, "url")
+                .join(
                     prior_bands.select(
                         F.col("url").alias("dup_url"), "band", "band_key"
                     ),

@@ -24,6 +24,25 @@ from pyspark.sql import SparkSession
 ARROW_BATCH_ROWS = 4096
 
 
+def default_driver_mem(mem_total_kb: int | None = None) -> str:
+    """Driver heap when SPARK_DRIVER_MEM is unset: 40% of the host's
+    MemTotal (its /proc/meminfo line unless given), whole GiB in
+    [1g, 48g]; 48g where MemTotal cannot be read. In local mode the
+    driver JVM is also the executor, and its resident size grows well
+    past the heap (off-heap shuffle and Arrow buffers, metaspace),
+    beside the Python workers."""
+    if mem_total_kb is None:
+        try:
+            with open("/proc/meminfo") as fh:
+                mem_total_kb = next(
+                    int(line.split()[1]) for line in fh
+                    if line.startswith("MemTotal:")
+                )
+        except (OSError, StopIteration, ValueError, IndexError):
+            return "48g"
+    return f"{min(48, max(1, int(mem_total_kb * 0.4) >> 20))}g"
+
+
 def get_spark(
     app_name: str = "deepee_spark",
     master: str | None = None,
@@ -111,7 +130,10 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
             str(ARROW_BATCH_ROWS),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Python-worker lifecycle: fork from a daemon that has already

@@ -53,3 +53,39 @@ def test_two_drops_with_recrawl_and_near_dup(spark, tmp_path):
     )
     assert r2b["triples"].count() == n_triples_2
     assert r2b["n_near_dup"] == 1
+
+
+def test_repeated_url_within_drop(spark, tmp_path):
+    """A url repeated (same text) inside a drop is signed once per row.
+    The committed triples equal those of the same drops without the
+    repeats, and so does the near-dup pair set; the repeated pair is
+    reported once per (drop row, history row) in both signing forms."""
+    docs = corpus_df(spark, 40).localCheckpoint()
+    d1 = docs.filter("url LIKE '%page/1%' OR url LIKE '%page/2%'")
+    base = d1.filter("lang = 'en'").orderBy("url").limit(1)
+    copy = base.withColumn("url", F.concat("url", F.lit("?copy")))
+    d2 = docs.filter("url LIKE '%page/3%'").unionByName(copy)
+
+    def run(name, drops):
+        pipe = Pipeline(spark, StageCatalog(str(tmp_path / name)))
+        out = [pipe.process_crawl_drop(d, f"drop{i}") for i, d in enumerate(drops)]
+        dups = [sorted(tuple(r) for r in o["near_dups"].collect()) for o in out]
+        triples = sorted(
+            tuple(r) for r in out[-1]["triples"]
+            .select("url", "subj", "pred", "obj", "confidence").collect()
+        )
+        return dups, triples
+
+    dups, triples = run("repeat", [d1.unionByName(base), d2.unionByName(copy)])
+    ref_dups, ref_triples = run("once", [d1, d2])
+    assert triples == ref_triples and len(triples) > 0
+    # the repeated near-copy pair comes once per (drop row, history row)
+    copy_url = copy.first().url
+    assert dups[0] == ref_dups[0] == []
+    assert sorted(set(dups[1])) == ref_dups[1]
+    assert [p for p in dups[1] if p[0] == copy_url] == [
+        p for p in ref_dups[1] if p[0] == copy_url
+    ] * 4
+    assert [p for p in dups[1] if p[0] != copy_url] == [
+        p for p in ref_dups[1] if p[0] != copy_url
+    ]

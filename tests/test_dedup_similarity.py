@@ -3,6 +3,10 @@
 from __future__ import annotations
 
 from deepee_spark.operators.dedup import (
+    _MH,
+    MINHASH_K,
+    MOD,
+    band_rows,
     exact_duplicates,
     minhash_dup_pairs,
     minhash_signatures,
@@ -42,6 +46,48 @@ def test_minhash_identical_signatures(spark):
     assert common_near >= 2  # J=0.8 pair shares minima...
     assert common_far == 0  # ...disjoint docs share none
     assert sigs[1] != sigs[4]
+
+
+def _py_str_hash(token: str) -> int:
+    acc = 0
+    for ch in token:
+        acc = (acc * 31 + ord(ch)) % MOD
+    return acc
+
+
+def test_minhash_signatures_match_python_minhash(spark):
+    """Each signature is the pure-Python MinHash of the str_hash fold."""
+    docs = _docs(spark)
+    got = {r["doc_id"]: [r[f"sig{i}"] for i in range(MINHASH_K)]
+           for r in minhash_signatures(docs, "doc_id", "tokens").collect()}
+    want = {}
+    for r in docs.collect():
+        hs = [_py_str_hash(t) for t in set(r["tokens"])]
+        want[r["doc_id"]] = [min((a * h + b) % MOD for h in hs) for a, b in _MH]
+    assert got == want
+
+
+def test_band_keys_match_per_band_xxhash(spark):
+    """band_rows keys equal the per-band xxhash64 of the same sig columns."""
+    from pyspark.sql import functions as F
+
+    sigs = minhash_signatures(_docs(spark), "doc_id", "tokens")
+    for bands in (8, 4):
+        rows = MINHASH_K // bands
+        ref = sigs.select(
+            "doc_id",
+            F.explode(F.array(*[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    F.xxhash64(*[F.col(f"sig{b * rows + r}") for r in range(rows)])
+                    .cast("string").alias("band_key"),
+                )
+                for b in range(bands)
+            ])).alias("bk"),
+        ).select("doc_id", "bk.band", "bk.band_key")
+        got = band_rows(sigs, "doc_id", bands)
+        assert got.schema == ref.schema
+        assert sorted(got.collect()) == sorted(ref.collect())
 
 
 def test_minhash_dup_pairs(spark):

@@ -250,6 +250,101 @@ def test_minhash_signature_deterministic(spark):
     assert len(sig[0]["sig"]) == N_HASHES
 
 
+def _groupby_minhash_signature(df, id_col, text_col):
+    """Reference signing: explode the grams, K hash columns, groupBy min."""
+    from deepee_spark.operators.linking import N_HASHES, char_ngrams
+
+    grams = df.select(id_col, F.explode(char_ngrams(F.col(text_col))).alias("gram"))
+    hashed = grams.select(
+        id_col,
+        *[F.xxhash64("gram", F.lit(i)).alias(f"h{i}") for i in range(N_HASHES)],
+    )
+    agg = hashed.groupBy(id_col).agg(
+        *[F.min(f"h{i}").alias(f"h{i}") for i in range(N_HASHES)]
+    )
+    return agg.select(
+        id_col, F.array(*[f"h{i}" for i in range(N_HASHES)]).alias("sig")
+    )
+
+
+def _struct_lsh_bands(sig_df, id_col):
+    """Reference banding: one Python-built struct per band."""
+    from deepee_spark.operators.linking import BANDS, ROWS_PER_BAND
+
+    bands = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.xxhash64(
+                    *[F.element_at("sig", b * ROWS_PER_BAND + r + 1)
+                      for r in range(ROWS_PER_BAND)]
+                ).alias("band_key"),
+            )
+            for b in range(BANDS)
+        ]
+    )
+    return sig_df.select(id_col, F.explode(bands).alias("bk")).select(
+        id_col, "bk.band", "bk.band_key"
+    )
+
+
+def test_fuzzy_linking_matches_groupby_reference(spark, monkeypatch):
+    """Fuzzy links over gazetteer typos (1-2 character edits), digit and
+    case variants, unlinkable noise and an empty surface equal those of
+    the explode + groupBy signing and per-band struct banding."""
+    from deepee_spark.operators import linking
+    from deepee_spark.plans.pipeline import alias_df
+
+    surfaces = [
+        "Washingtn", "washingtonn", "Beijjing", "Londn", "pariss",
+        "Bagdad", "Jonhson", "Garcai", "Muellr", "Ivanoff", "Microsft",
+        "Toyotta", "Senat", "Pentagn", "Interpool", "Airprt", "Hospitl",
+        "Courthose", "Convoi", "Missle", "Rifel", "Tuesdy", "Yesterdy",
+        "Toyota9", "washington2", "PENTAGON", "Smith", "chen",
+        "qqqqzzz", "xyzzy plugh", "", "a",
+    ]
+    mentions = spark.createDataFrame(
+        list(enumerate(surfaces)), "mention_id long, surface string"
+    )
+    aliases = alias_df(spark).unionByName(
+        spark.createDataFrame(
+            [("washington dc", "E:gpe.washington", 0.7)],
+            ["alias", "entity_id", "prior"],
+        )
+    )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    got = rows(linking.link_mentions(mentions, aliases))
+    monkeypatch.setattr(linking, "minhash_signature", _groupby_minhash_signature)
+    monkeypatch.setattr(linking, "lsh_bands", _struct_lsh_bands)
+    ref = rows(linking.link_mentions(mentions, aliases))
+    assert got == ref
+    methods = {r[0]: r[4] for r in got}
+    assert sum(m == "fuzzy" for m in methods.values()) >= 10
+    assert methods[surfaces.index("PENTAGON")] == "exact"
+    assert surfaces.index("") not in methods
+    assert surfaces.index("qqqqzzz") not in methods
+
+
+def test_minhash_signature_and_bands_match_reference(spark):
+    from deepee_spark.operators.linking import lsh_bands
+
+    df = spark.createDataFrame(
+        [(1, "washington"), (2, "washingtan"), (3, ""), (4, None), (5, "ab")],
+        "id long, s string",
+    )
+    sig = minhash_signature(df, "id", "s")
+    ref = _groupby_minhash_signature(df, "id", "s")
+    assert sig.schema == ref.schema
+    assert sorted(sig.collect()) == sorted(ref.collect())
+    assert {r["id"] for r in sig.collect()} == {1, 2, 5}
+    bands, ref_bands = lsh_bands(sig, "id"), _struct_lsh_bands(ref, "id")
+    assert bands.schema == ref_bands.schema
+    assert sorted(bands.collect()) == sorted(ref_bands.collect())
+
+
 def test_salted_join_matches_plain_join(spark):
     fact = spark.createDataFrame(
         [(i, "k%d" % (i % 3)) for i in range(100)], ["row_id", "key"]

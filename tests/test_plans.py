@@ -1043,3 +1043,22 @@ def test_pq_encode_partial_min_by_no_window(spark):
     assert "Window" not in plan, plan
     assert "partial_min_by" in plan, plan
     assert out.count() == 40  # N x n_sub codes
+
+
+def test_history_dedup_verification_runs_on_every_core(spark, tmp_path):
+    """Near-dup verification in dedup_drop_against_history is CPU-heavy
+    but byte-light: without an explicit-count repartition AQE coalesces
+    it into one task. Its pinned output has one partition per
+    verification task, so count them at run time."""
+    from deepee_spark.corpus import corpus_df
+    from deepee_spark.plans.pipeline import Pipeline
+    from deepee_spark.sources.tables import StageCatalog
+
+    docs = corpus_df(spark, 120).localCheckpoint()
+    first = docs.limit(60).localCheckpoint()
+    second = docs.exceptAll(first).localCheckpoint()
+    pipe = Pipeline(spark, StageCatalog(str(tmp_path / "cat")))
+    pipe.dedup_drop_against_history(first, "drop1")
+    dups = pipe.dedup_drop_against_history(second, "drop2")
+    assert dups.count() > 0
+    assert dups.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism > 1
