@@ -26,11 +26,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from deepee_spark.ontology import ENTITY_GAZETTEER, ROLE_RULE, ROLE_TO_ID, TRIGGER_LEXICON
+from deepee_spark.operators.dedup import str_hash
+from deepee_spark.operators.similarity import dot
+from deepee_spark.operators.textstats import EN_STOPWORDS, ZH_HINT_RANGE
 
 SF_DEFAULT = "/root/testdata/sf0.001"
 MOD = 1_000_000_007
-
-EN_STOP = ["the", "a", "of", "and", "in", "to"]
 
 # MinHash parameters (shared literals in both dialects)
 MINHASH_K = 8
@@ -55,34 +56,12 @@ def _role_rule_values() -> str:
     return f"(VALUES {rows}) AS rr(event_type, entity_type, role)"
 
 
-def _stop_array_sql() -> str:
-    return "[" + ", ".join(f"'{w}'" for w in EN_STOP) + "]"
-
-
 # ---------------------------------------------------------------------------
 # shared column helpers (Spark side)
 # ---------------------------------------------------------------------------
 
 def _tokens(col="text"):
     return F.filter(F.split(F.col(col), " "), lambda t: t != "")
-
-
-def _str_hash(col):
-    """Ordered left-fold rolling hash, identical to the DuckDB fold."""
-    return F.aggregate(
-        F.transform(F.split(col, ""), lambda c: F.ascii(c).cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, c: (acc * 31 + c) % F.lit(MOD),
-    )
-
-
-def _dot(a, b, dim=64):
-    """Ordered-fold dot product over double-cast arrays (bit-deterministic)."""
-    prods = F.transform(
-        F.sequence(F.lit(1), F.lit(dim)),
-        lambda i: F.element_at(a, i).cast("double") * F.element_at(b, i).cast("double"),
-    )
-    return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
 
 
 _DOT_SQL = (
@@ -1869,13 +1848,11 @@ FROM t
 # ---------------------------------------------------------------------------
 
 def _dedup_exact(spark, sf):
+    from deepee_spark.operators.dedup import exact_duplicates
+
     docs = _t(spark, sf, "documents")
-    return (
-        docs.groupBy(F.md5(F.col("text")).alias("text_md5"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.min("doc_id").cast("long").alias("keep_doc_id"),
-        )
+    return exact_duplicates(docs, "doc_id", "text").withColumnRenamed(
+        "keep_id", "keep_doc_id"
     )
 
 
@@ -1905,24 +1882,10 @@ FROM hashed GROUP BY doc_id
 
 
 def _simhash(spark, sf):
-    docs = _t(spark, sf, "documents")
-    toks = docs.select("doc_id", F.explode(_tokens()).alias("token"))
-    h = _str_hash(F.col("token"))
-    bits = toks.select(
-        "doc_id",
-        *[
-            (F.shiftright(h, j).bitwiseAND(F.lit(1)) * 2 - 1).alias(f"b{j}")
-            for j in range(SIMHASH_BITS)
-        ],
-    )
-    agg = bits.groupBy("doc_id").agg(
-        *[F.sum(f"b{j}").alias(f"s{j}") for j in range(SIMHASH_BITS)]
-    )
-    sim = None
-    for j in range(SIMHASH_BITS):
-        term = F.when(F.col(f"s{j}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        sim = term if sim is None else sim + term
-    return agg.select("doc_id", sim.cast("long").alias("simhash"))
+    from deepee_spark.operators.dedup import simhash
+
+    docs = _t(spark, sf, "documents").select("doc_id", _tokens().alias("toks"))
+    return simhash(docs, "doc_id", "toks")
 
 
 _SIMHASH_SQL = f"""
@@ -1977,60 +1940,23 @@ FROM pairs GROUP BY hamming
 
 
 def _ngram_jaccard(spark, sf):
-    docs = _t(spark, sf, "documents")
-    # Shingles are 64-bit hashes of the shingle STRING, hashed with each
-    # engine's native function (xxhash64 here, hash() in DuckDB). Hash
-    # values never appear in the output — only |A∩B|/|A∪B| does — so the
-    # two engines agree exactly unless a 64-bit collision occurs (~1e-11
-    # over this candidate space). The O(pairs) intersect/union then
-    # compares 8-byte ints instead of ~15-char strings.
-    toked = docs.select(
+    """Token-trigram Jaccard within (lang, length-bucket) blocks
+    (operators/dedup.ngram_jaccard_pairs). The oracle hashes each
+    shingle string; hashes never reach the output, so the two agree
+    unless a 64-bit collision occurs."""
+    from deepee_spark.operators.dedup import ngram_jaccard_pairs
+
+    docs = _t(spark, sf, "documents").select(
         "doc_id",
         "lang",
         F.floor(F.col("n_chars") / 100).cast("long").alias("bucket"),
         _tokens().alias("toks"),
     )
-    # zip_with over three shifted slices: the `toks` column is referenced a
-    # constant number of times per ROW. (An element_at(toks, i) lambda is
-    # re-inlined by projection collapse and re-tokenizes the text at every
-    # position: O(L^2) — measured 5s of this query's 8s.)
-    t1 = F.slice(F.col("toks"), 1, F.greatest(F.size("toks") - 2, F.lit(1)))
-    t2 = F.slice(F.col("toks"), 2, F.greatest(F.size("toks") - 2, F.lit(1)))
-    t3 = F.slice(F.col("toks"), 3, F.greatest(F.size("toks") - 2, F.lit(1)))
-    pair = F.zip_with(t1, t2, lambda a, b: F.concat_ws("_", a, b))
-    sh = F.array_distinct(
-        F.zip_with(pair, t3, lambda ab, c: F.xxhash64(F.concat_ws("_", ab, c)))
+    pairs = ngram_jaccard_pairs(
+        docs, "doc_id", "toks", ["lang", "bucket"], n=3, min_jaccard=0.03
     )
-    d = toked.select(
-        "doc_id",
-        "lang",
-        "bucket",
-        sh.alias("shingles"),
-    ).filter(F.size(F.col("shingles")) >= 3)
-    # Only ~|langs x buckets| distinct join keys, so a shuffle join would run
-    # on that few tasks; instead spread the probe side wide and broadcast the
-    # build side (the banded table is tiny relative to the corpus it indexes).
-    # At true corpus scale the all-pairs-within-band check is only ever run
-    # AFTER MinHash/LSH candidate pruning (dedup_minhash_signatures) — this
-    # query is the exact-verify stage of that pair.
-    nparts = max(spark.sparkContext.defaultParallelism * 2, 8)
-    a = d.repartition(nparts).alias("a")
-    b = d.alias("b")
-    pairs = a.join(
-        F.broadcast(b),
-        (F.col("a.lang") == F.col("b.lang"))
-        & (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    )
-    inter = F.size(F.array_intersect(F.col("a.shingles"), F.col("b.shingles")))
-    union = F.size(F.array_union(F.col("a.shingles"), F.col("b.shingles")))
-    return (
-        pairs.select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.round(inter / union, 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= 0.03)
+    return pairs.select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "jaccard"
     )
 
 
@@ -2103,24 +2029,11 @@ WHERE ROUND(len(list_intersect(a.shingles, b.shingles)) /
 
 
 def _ann_cosine_topk(spark, sf):
-    from pyspark.sql import Window as W
+    from deepee_spark.operators.similarity import brute_force_topk
 
     emb = _t(spark, sf, "embeddings")
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    c = emb.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb"))
-    pairs = q.crossJoin(c).filter(F.col("q_id") != F.col("c_id"))
-    cos = _dot(F.col("q_emb"), F.col("c_emb")) / (
-        F.sqrt(_dot(F.col("q_emb"), F.col("q_emb")))
-        * F.sqrt(_dot(F.col("c_emb"), F.col("c_emb")))
-    )
-    scored = pairs.select("q_id", "c_id", F.round(cos, 6).alias("cosine"))
-    w = W.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 3)
-        .select("q_id", "rank", "c_id", "cosine")
+    return brute_force_topk(
+        emb.filter(F.col("vec_id") < 5), emb, "vec_id", "embedding", 64, k=3
     )
 
 
@@ -2189,15 +2102,15 @@ def _ann_rrf_fused(spark, sf):
         F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb")
     )
     pairs = q.crossJoin(c).filter(F.col("q_id") != F.col("c_id"))
-    cos = _dot(F.col("q_emb"), F.col("c_emb")) / (
-        F.sqrt(_dot(F.col("q_emb"), F.col("q_emb")))
-        * F.sqrt(_dot(F.col("c_emb"), F.col("c_emb")))
+    cos = dot(F.col("q_emb"), F.col("c_emb"), 64) / (
+        F.sqrt(dot(F.col("q_emb"), F.col("q_emb"), 64))
+        * F.sqrt(dot(F.col("c_emb"), F.col("c_emb"), 64))
     )
     scored = pairs.select(
         "q_id",
         "c_id",
         F.round(cos, 6).alias("cosine"),
-        F.round(_dot(F.col("q_emb"), F.col("c_emb")), 6).alias("dotv"),
+        F.round(dot(F.col("q_emb"), F.col("c_emb"), 64), 6).alias("dotv"),
     )
     wc = W.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
     wd = W.partitionBy("q_id").orderBy(F.desc("dotv"), F.asc("c_id"))
@@ -2263,28 +2176,12 @@ FROM scored QUALIFY rank <= 3
 
 
 def _lsh_hyperplane(spark, sf):
+    from deepee_spark.operators.similarity import hyperplane_bucket
+
     emb = _t(spark, sf, "embeddings")
-    planes = 8
-
-    def rvec(p):
-        return F.transform(
-            F.sequence(F.lit(1), F.lit(64)),
-            lambda j: (
-                (F.lit(p) * 73856093 + j * 19349663) % F.lit(2000) - 1000
-            ).cast("double")
-            / 1000.0,
-        )
-
-    bucket = None
-    for p in range(planes):
-        d = _dot(F.col("embedding"), rvec(p))
-        bit = F.when(d > 0, F.lit(1 << p)).otherwise(F.lit(0))
-        bucket = bit if bucket is None else bucket + bit
-    return (
-        emb.select(bucket.cast("long").alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
+    return emb.groupBy(
+        hyperplane_bucket(F.col("embedding"), 64).alias("bucket")
+    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
 
 
 _LSH_PLANE_TERM = (
@@ -2301,92 +2198,81 @@ SELECT bucket, COUNT(*) AS n FROM b GROUP BY bucket
 
 
 def _lang_id(spark, sf):
-    docs = _t(spark, sf, "documents")
-    stop = F.array(*[F.lit(w) for w in EN_STOP])
-    toks = _tokens()
-    ratio = F.size(F.filter(toks, lambda t: F.array_contains(stop, t))) / F.size(toks)
-    pred = F.when(ratio >= 0.05, F.lit("en")).otherwise(F.lit("other"))
-    return docs.select("lang", pred.alias("pred_lang")).groupBy(
-        "lang", "pred_lang"
-    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
+    from deepee_spark.operators.textstats import lang_id
 
+    return lang_id(_t(spark, sf, "documents")).groupBy("lang", "pred_lang").agg(
+        F.count(F.lit(1)).cast("long").alias("n")
+    )
+
+
+# textstats rules: `\s+` tokens (tokens_of), the 10-word EN_STOPWORDS
+# list, the CJK share of ZH_HINT_RANGE characters; a ratio over zero
+# tokens is NULL in both engines
+_WS_TOKENS_SQL = r"list_filter(string_split_regex(text, '\s+'), t -> t != '')"
+_EN_STOP_SQL = "[" + ", ".join(f"'{w}'" for w in EN_STOPWORDS) + "]"
 
 _LANG_SQL = f"""
 WITH t AS (
-  SELECT lang,
-         CASE WHEN len(list_filter({_TOKENS_SQL},
-                  x -> list_contains({_stop_array_sql()}, x))) /
-              CAST(len({_TOKENS_SQL}) AS DOUBLE) >= 0.05
-              THEN 'en' ELSE 'other' END AS pred_lang
-  FROM documents)
-SELECT lang, pred_lang, COUNT(*) AS n FROM t GROUP BY 1, 2
+  SELECT lang, text, {_WS_TOKENS_SQL} AS toks FROM documents)
+SELECT lang,
+       CASE WHEN len(list_filter(string_split(text, ''),
+                  c -> c >= '{ZH_HINT_RANGE[0]}' AND c <= '{ZH_HINT_RANGE[1]}')) /
+                 CAST(greatest(length(text), 1) AS DOUBLE) > 0.2 THEN 'zh'
+            WHEN len(list_filter(toks, x -> list_contains({_EN_STOP_SQL}, x))) /
+                 CAST(len(toks) AS DOUBLE) >= 0.05 THEN 'en'
+            ELSE 'other' END AS pred_lang,
+       COUNT(*) AS n
+FROM t GROUP BY 1, 2
 """
 
 
 def _quality_score(spark, sf):
-    docs = _t(spark, sf, "documents")
-    toks = _tokens()
-    n = F.size(toks)
-    stop = F.array(*[F.lit(w) for w in EN_STOP])
-    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop, t)))
-    total_chars = F.aggregate(
-        F.transform(toks, lambda t: F.length(t).cast("long")),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
-    mean_len = F.round(total_chars / n, 6)
-    stop_ratio = F.round(n_stop / n, 6)
-    score = F.round(
-        0.01 * n.cast("double") + 0.1 * (total_chars / n) - 0.5 * (n_stop / n), 6
-    )
-    return docs.select(
-        "doc_id",
-        n.cast("long").alias("n_tokens"),
-        mean_len.alias("mean_token_len"),
-        stop_ratio.alias("stopword_ratio"),
-        score.alias("quality"),
-    )
+    from deepee_spark.operators.textstats import quality_features
+
+    docs = _t(spark, sf, "documents").select("doc_id", "text")
+    return quality_features(docs).drop("text")
 
 
 _QUALITY_SQL = f"""
 WITH t AS (
-  SELECT doc_id, {_TOKENS_SQL} AS toks FROM documents),
+  SELECT doc_id, text, {_WS_TOKENS_SQL} AS toks FROM documents),
 m AS (
   SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
          CAST(list_reduce(list_prepend(0::BIGINT, list_transform(toks, x -> length(x)::BIGINT)),
               (a, b) -> a + b) AS BIGINT) AS total_chars,
-         CAST(len(list_filter(toks, x -> list_contains({_stop_array_sql()}, x))) AS BIGINT) AS n_stop
+         CAST(len(list_filter(toks, x -> list_contains({_EN_STOP_SQL}, x))) AS BIGINT) AS n_stop,
+         length(regexp_replace(text, '[^.,;:!?]', '', 'g')) /
+           CAST(greatest(length(text), 1) AS DOUBLE) AS punct
   FROM t)
 SELECT doc_id, n_tokens,
        ROUND(total_chars / CAST(n_tokens AS DOUBLE), 6) AS mean_token_len,
        ROUND(n_stop / CAST(n_tokens AS DOUBLE), 6) AS stopword_ratio,
+       ROUND(punct, 6) AS punct_ratio,
        ROUND(0.01 * n_tokens + 0.1 * (total_chars / CAST(n_tokens AS DOUBLE))
-             - 0.5 * (n_stop / CAST(n_tokens AS DOUBLE)), 6) AS quality
+             - 0.5 * (n_stop / CAST(n_tokens AS DOUBLE)) - 2.0 * punct, 6) AS quality
 FROM m
 """
 
 
 def _token_counts(spark, sf):
-    docs = _t(spark, sf, "documents")
-    return docs.select(
-        "doc_id",
-        F.size(_tokens()).cast("long").alias("ws_tokens"),
-        F.size(F.regexp_extract_all("text", F.lit("[a-z]+|[0-9]+"), 0))
-        .cast("long")
-        .alias("re_tokens"),
-    )
+    from deepee_spark.operators.textstats import token_counts
+
+    docs = _t(spark, sf, "documents").select("doc_id", "text")
+    return token_counts(docs).drop("text")
 
 
-_TOKEN_COUNTS_SQL = f"""
-SELECT doc_id, CAST(len({_TOKENS_SQL}) AS BIGINT) AS ws_tokens,
-       CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+')) AS BIGINT) AS re_tokens
+_TOKEN_COUNTS_SQL = rf"""
+SELECT doc_id, CAST(len({_WS_TOKENS_SQL}) AS BIGINT) AS ws_tokens,
+       CAST(len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^\sa-zA-Z0-9]')) AS BIGINT) AS re_tokens
 FROM documents
 """
 
 
 def _doc_fingerprint(spark, sf):
-    docs = _t(spark, sf, "documents")
-    return docs.select("doc_id", _str_hash(F.col("text")).alias("fingerprint"))
+    from deepee_spark.operators.textstats import fingerprint
+
+    docs = _t(spark, sf, "documents").select("doc_id", "text")
+    return fingerprint(docs).drop("text")
 
 
 _FINGERPRINT_SQL = f"""
@@ -3093,7 +2979,6 @@ def _stream_first_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from deepee_spark.operators.dedup import str_hash
     from deepee_spark.streaming.stateful import (
         OUT_SCHEMA,
         STATE_SCHEMA,
@@ -6057,10 +5942,11 @@ def _with_tags(tp):
     The fold hash is materialized through a repartition barrier: the tag
     and ptag expressions reference it 3x, and projection collapse would
     otherwise re-run the per-character fold per reference. The shuffle
-    also pre-distributes by doc_id for the chunking windows downstream.
+    also pre-distributes by doc_id for the per-document tag arrays
+    downstream.
     """
     spark = tp.sparkSession
-    hashed = tp.withColumn("h", _str_hash(F.col("token"))).repartition(
+    hashed = tp.withColumn("h", str_hash(F.col("token"))).repartition(
         spark.sparkContext.defaultParallelism, "doc_id"
     )
     h = F.col("h")
@@ -6155,7 +6041,7 @@ def _s4_conll_scan(spark, sf):
         "sent_key",
         "n_tokens",
         "first_line",
-        _str_hash(F.concat_ws(" ", F.col("toks"))).alias("sent_hash"),
+        str_hash(F.concat_ws(" ", F.col("toks"))).alias("sent_hash"),
     )
 
 
@@ -6184,29 +6070,31 @@ FROM grouped
 """
 
 
+def _tag_arrays(tagged, tagcol: str):
+    """(doc_id, tags): each document's ``tagcol`` values in pos order."""
+    return tagged.groupBy("doc_id").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", tagcol))),
+            lambda s: s[tagcol],
+        ).alias("tags")
+    )
+
+
 def _sc2_iob_iobes(spark, sf):
-    """SC2: IOB -> IOBES via lead(tag) (EEGCN data_utils.py:17-37)."""
-    from pyspark.sql import Window as W
+    """SC2: IOB -> IOBES (EEGCN data_utils.py:17-37) through
+    operators/bio.iob_to_iobes over each document's tag array."""
+    from deepee_spark.operators.bio import iob_to_iobes
 
     tagged = _with_tags(_tok_pos(_t(spark, sf, "documents")))
-    nxt = F.lead("tag").over(W.partitionBy("doc_id").orderBy("pos"))
-    t = F.col("tag")
-    iobes = (
-        F.when(t == "O", "O")
-        .when(
-            t.startswith("B-"),
-            F.when(F.coalesce(nxt, F.lit("O")).startswith("I-"), t).otherwise(
-                F.concat(F.lit("S-"), F.substring(t, 3, 10))
-            ),
-        )
-        .otherwise(
-            F.when(F.coalesce(nxt, F.lit("O")).startswith("I-"), t).otherwise(
-                F.concat(F.lit("E-"), F.substring(t, 3, 10))
-            )
-        )
+    conv = _tag_arrays(tagged, "tag").select(
+        "doc_id", "tags", F.posexplode(iob_to_iobes(F.col("tags"))).alias("i", "iobes")
     )
-    return tagged.select("doc_id", "pos", "tag", iobes.alias("iobes"))
-
+    return conv.select(
+        "doc_id",
+        (F.col("i") + 1).alias("pos"),
+        F.col("tags")[F.col("i")].alias("tag"),
+        "iobes",
+    )
 
 _SC2_SQL = f"""
 WITH tagged AS ({_TAGS_SQL}),
@@ -6223,34 +6111,21 @@ FROM w
 """
 
 
-def _chunks_expr(tagged, tagcol: str):
-    """SC3 BIO merge: I-without-B promoted to start; type change closes the
-    span (JMEE testing.py:25-60). Returns (doc_id, start, end, ctype)."""
-    from pyspark.sql import Window as W
+def _bio_chunks(tagged, tagcol: str):
+    """SC3 BIO merge (JMEE testing.py:25-60) through
+    operators/bio.bio_merge_spans -> (doc_id, start, end, ctype) with
+    inclusive 1-based positions (pos is 1-based and gap-free per doc)."""
+    from deepee_spark.operators.bio import bio_merge_spans
 
-    prev = F.lag(tagcol).over(W.partitionBy("doc_id").orderBy("pos"))
-    t = F.col(tagcol)
-    is_start = F.when(
-        t == "O", F.lit(0)
-    ).when(t.startswith("B-"), F.lit(1)).otherwise(
-        F.when(
-            F.coalesce(prev, F.lit("O")) == "O", F.lit(1)
-        ).when(
-            F.substring(F.coalesce(prev, F.lit("O")), 3, 10) != F.substring(t, 3, 10),
-            F.lit(1),
-        ).otherwise(F.lit(0))
+    spans = _tag_arrays(tagged, tagcol).select(
+        "doc_id", F.explode(bio_merge_spans(F.col("tags"))).alias("s")
     )
-    marked = tagged.withColumn("is_start", is_start)
-    cid = F.sum("is_start").over(
-        W.partitionBy("doc_id").orderBy("pos").rowsBetween(W.unboundedPreceding, 0)
+    return spans.select(
+        "doc_id",
+        (F.col("s.start") + 1).alias("start"),
+        F.col("s.end").alias("end"),
+        F.col("s.etype").alias("ctype"),
     )
-    spans = marked.withColumn("chunk_id", cid).filter(t != "O")
-    return spans.groupBy("doc_id", "chunk_id").agg(
-        F.min("pos").alias("start"),
-        F.max("pos").alias("end"),
-        F.min(F.substring(t, 3, 10)).alias("ctype"),
-    ).drop("chunk_id")
-
 
 _CHUNKS_SQL_TMPL = """
   SELECT doc_id, MIN(pos) AS start, MAX(pos) AS "end", MIN(substr({tc}, 3)) AS ctype
@@ -6278,13 +6153,7 @@ def _sc2b_iobes_roundtrip(spark, sf):
     from deepee_spark.operators.bio import iob_to_iobes, iobes_to_iob
 
     tagged = _with_tags(_tok_pos(_t(spark, sf, "documents")))
-    per_doc = tagged.groupBy("doc_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "tag"))),
-            lambda s: s["tag"],
-        ).alias("tags")
-    )
-    conv = per_doc.select(
+    conv = _tag_arrays(tagged, "tag").select(
         "doc_id", "tags", iob_to_iobes(F.col("tags")).alias("iobes")
     )
     return conv.select(
@@ -6323,7 +6192,7 @@ FROM back GROUP BY doc_id
 
 def _sc3_bio_chunks(spark, sf):
     tagged = _with_tags(_tok_pos(_t(spark, sf, "documents")))
-    return _chunks_expr(tagged, "tag")
+    return _bio_chunks(tagged, "tag")
 
 
 _SC3_SQL = f"""
@@ -6336,10 +6205,8 @@ def _a4_chunk_prf(spark, sf):
     """A4/A5: conlleval-style per-type chunk P/R/F1, pred vs gold
     (EEGCN conlleval.py:52-210; seqeval JMEE testing.py)."""
     tagged = _with_tags(_tok_pos(_t(spark, sf, "documents")))
-    gold = _chunks_expr(tagged, "tag")
-    pred = _chunks_expr(
-        tagged.select("doc_id", "pos", F.col("ptag").alias("tag")), "tag"
-    )
+    gold = _bio_chunks(tagged, "tag")
+    pred = _bio_chunks(tagged, "ptag")
     correct = gold.join(pred, ["doc_id", "start", "end", "ctype"]).groupBy(
         "ctype"
     ).agg(F.count(F.lit(1)).cast("long").alias("n_correct"))
@@ -6419,7 +6286,7 @@ def _j2_embedding_alignment(spark, sf):
     pre = (
         mentions.select(F.lower(F.col("token")).alias("word"))
         .distinct()
-        .filter(_str_hash(F.col("word")) % 3 == 0)
+        .filter(str_hash(F.col("word")) % 3 == 0)
     )
     e = pre.select(F.col("word").alias("w_exact"))
     l = pre.select(F.col("word").alias("w_lower"))
@@ -6483,7 +6350,7 @@ def _j6_trigger_entity_pairs(spark, sf):
     (ee.py:227-236). Trigger/entity vocabularies are hash-derived from the
     corpus so both engines block identically."""
     docs = _t(spark, sf, "documents")
-    h = _str_hash(F.col("token"))
+    h = str_hash(F.col("token"))
     tp = _tok_pos(docs).withColumn("h", h)
     trig = tp.filter(F.col("h") % 7 == 0).select(
         "doc_id",
@@ -7217,7 +7084,7 @@ FROM ex JOIN fed ON ex.frame = fed.frame AND ex.fe_name = fed.fe_name
 
 def _a6_micro_f1(spark, sf):
     ev = _t(spark, sf, "events")
-    h = _str_hash(F.col("event_type"))
+    h = str_hash(F.col("event_type"))
     gold = (h % 5).cast("int")
     pred = F.when((h * 7) % 11 == 0, (h % 5 + 1) % 5).otherwise(h % 5).cast("int")
     lab = ev.select(gold.alias("gold"), pred.alias("pred"))
@@ -7281,7 +7148,7 @@ def _ann_ivf_topk(spark, sf):
     assigned = assign_cells(
         emb.select(F.col("vec_id").alias("pid"), F.col("embedding").alias("v")),
         cent.select("c_id", F.col("c_emb").alias("cent")),
-        lambda v, cv: F.round(_dot(v, cv), 6),
+        lambda v, cv: F.round(dot(v, cv, 64), 6),
     ).select(
         F.col("pid").alias("vec_id"),
         F.col("v").alias("embedding"),
@@ -7298,7 +7165,7 @@ def _ann_ivf_topk(spark, sf):
             "q_id",
             "q_emb",
             "c_id",
-            F.round(_dot(F.col("q_emb"), F.col("c_emb")), 6).alias("qdot"),
+            F.round(dot(F.col("q_emb"), F.col("c_emb"), 64), 6).alias("qdot"),
         )
         .withColumn("rk", F.row_number().over(probe_w))
         .filter(F.col("rk") <= IVF_NPROBE)
@@ -7307,9 +7174,9 @@ def _ann_ivf_topk(spark, sf):
     cand = probes.join(assigned, "bucket").filter(
         F.col("q_id") != F.col("vec_id")
     )
-    cos = _dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(_dot(F.col("q_emb"), F.col("q_emb")))
-        * F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
+    cos = dot(F.col("q_emb"), F.col("embedding"), 64) / (
+        F.sqrt(dot(F.col("q_emb"), F.col("q_emb"), 64))
+        * F.sqrt(dot(F.col("embedding"), F.col("embedding"), 64))
     )
     scored = cand.select(
         "q_id", F.col("vec_id").alias("c_id"), F.round(cos, 6).alias("cosine")

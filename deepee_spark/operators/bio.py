@@ -97,22 +97,6 @@ def bio_merge_spans(tags: Column) -> Column:
     no_open = F.lit(None).cast("struct<start:int,etype:string>")
     init = F.struct(no_open.alias("open"), empty_spans.alias("done"))
 
-    def close(acc):
-        return F.when(
-            acc["open"].isNull(), acc["done"]
-        ).otherwise(
-            F.concat(
-                acc["done"],
-                F.array(
-                    F.struct(
-                        acc["open"]["start"].alias("start"),
-                        F.lit(None).cast("int").alias("end"),  # patched below
-                        acc["open"]["etype"].alias("etype"),
-                    )
-                ),
-            )
-        )
-
     def step(acc, s):
         t, i = s["t"], s["i"]
         typ = _tag_type(t)

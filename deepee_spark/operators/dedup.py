@@ -18,8 +18,9 @@ caller composes them into the DAG. Web-scale notes per operator:
                         bucket in a cogrouped pandas UDF, not a per-pair
                         expression; value blocking available opt-in
 
-The rolling string hash matches the engine-wide deterministic fold
-(functions in __spark_entry__ use the same formula for oracle parity).
+The rolling string hash is the engine-wide deterministic fold; the
+contract queries in __spark_entry__ import it, and its DuckDB twin
+(_HASH_SQL) replays the same fold.
 """
 
 from __future__ import annotations

@@ -19,9 +19,10 @@ def tokens_of(col):
 
 
 def stopword_ratio(tokens, stopwords: list[str] | None = None):
+    """Share of stopword tokens; null when there are no tokens."""
     stop = F.array(*[F.lit(w) for w in (stopwords or EN_STOPWORDS)])
-    return F.size(F.filter(tokens, lambda t: F.array_contains(stop, t))) / F.size(
-        tokens
+    return F.try_divide(
+        F.size(F.filter(tokens, lambda t: F.array_contains(stop, t))), F.size(tokens)
     )
 
 
@@ -36,7 +37,7 @@ def cjk_ratio(text):
 
 def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Heuristic language ID: CJK ratio -> zh; stopword ratio -> en; else
-    other. Adds ``pred_lang``."""
+    other (also for a page without tokens). Adds ``pred_lang``."""
     toks = tokens_of(F.col(text_col))
     pred = (
         F.when(cjk_ratio(F.col(text_col)) > 0.2, F.lit("zh"))
@@ -47,7 +48,11 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Adds n_tokens, mean_token_len, stopword_ratio, punct_ratio, quality."""
+    """Adds n_tokens, mean_token_len, stopword_ratio, punct_ratio, quality.
+
+    quality = 0.01*n_tokens + 0.1*mean_token_len - 0.5*stopword_ratio
+    - 2*punct_ratio over the unrounded terms, rounded once. A page
+    without tokens gets null mean_token_len, stopword_ratio and quality."""
     toks = tokens_of(F.col(text_col))
     n = F.size(toks)
     total_chars = F.aggregate(
@@ -55,25 +60,19 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
         F.lit(0).cast("long"),
         lambda a, x: a + x,
     )
-    punct = F.length(F.regexp_replace(F.col(text_col), r"[^.,;:!?]", ""))
-    out = (
-        df.withColumn("n_tokens", n.cast("long"))
-        .withColumn("mean_token_len", F.round(total_chars / n, 6))
-        .withColumn("stopword_ratio", F.round(stopword_ratio(toks), 6))
-        .withColumn(
-            "punct_ratio", F.round(punct / F.greatest(F.length(text_col), F.lit(1)), 6)
-        )
+    mean_len = F.try_divide(total_chars, n)
+    stop = stopword_ratio(toks)
+    punct = F.length(F.regexp_replace(F.col(text_col), r"[^.,;:!?]", "")) / F.greatest(
+        F.length(text_col), F.lit(1)
     )
-    return out.withColumn(
-        "quality",
-        F.round(
-            0.01 * F.col("n_tokens")
-            + 0.1 * F.col("mean_token_len")
-            - 0.5 * F.col("stopword_ratio")
-            - 2.0 * F.col("punct_ratio"),
-            6,
-        ),
-    )
+    quality = 0.01 * n.cast("double") + 0.1 * mean_len - 0.5 * stop - 2.0 * punct
+    return df.withColumns({
+        "n_tokens": n.cast("long"),
+        "mean_token_len": F.round(mean_len, 6),
+        "stopword_ratio": F.round(stop, 6),
+        "punct_ratio": F.round(punct, 6),
+        "quality": F.round(quality, 6),
+    })
 
 
 def token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:

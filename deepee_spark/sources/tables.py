@@ -171,18 +171,44 @@ class StageCatalog:
         SURVEY.md §7.11 (resume checks read them; ops dashboards would).
         """
         t0 = time.time()
+        tmp, counters, schema = self._write_staged(
+            df, name, f"stage:{name}", partition_by,
+            F.approx_count_distinct("_part_id").alias("partitions"),
+        )
+        meta = {
+            "run_id": self.run_id,
+            "stage": name,
+            "fingerprint": fingerprint,
+            "snapshot": self._next_snapshot(name),
+            "rows": int(counters.get("rows", -1)),
+            "partitions": int(counters.get("partitions", -1)),
+            "wall_sec": round(time.time() - t0, 3),
+            "committed_at": time.time(),
+            # schema travels with the snapshot: an EMPTY partitioned write
+            # produces no data files and parquet inference would fail
+            "schema": schema,
+            # the partition spec too, so table-maintenance ops
+            # (compact/append) preserve the layout without being told
+            "partition_by": list(partition_by or []),
+        }
+        return self._publish(name, tmp, meta)
+
+    def _next_snapshot(self, name: str) -> int:
+        snaps = self._snapshots(name)
+        return int(snaps[-1].split("=")[1]) + 1 if snaps else 0
+
+    def _write_staged(self, df, name, obs_name, partition_by, *metrics):
+        """Stamp lineage columns and write ``df`` into a fresh staging
+        dir of table ``name``, counting rows (plus ``metrics``) on the
+        write itself. -> (staging dir, observed counters, schema json)."""
         from pyspark.sql import Observation
 
-        obs = Observation(f"stage:{name}")
+        obs = Observation(obs_name)
         stamped = (
             df.withColumn("_run_id", F.lit(self.run_id))
             .withColumn("_stage", F.lit(name))
             .withColumn("_part_id", F.spark_partition_id())
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("rows"),
-                F.approx_count_distinct("_part_id").alias("partitions"),
-            )
+            .observe(obs, F.count(F.lit(1)).alias("rows"), *metrics)
         )
         tdir = self._table_dir(name)
         os.makedirs(tdir, exist_ok=True)
@@ -193,29 +219,17 @@ class StageCatalog:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(tmp)
-        counters = dict(obs.get)
-        snaps = self._snapshots(name)
-        n = int(snaps[-1].split("=")[1]) + 1 if snaps else 0
-        final = os.path.join(tdir, f"snapshot={n}")
-        meta = {
-            "run_id": self.run_id,
-            "stage": name,
-            "fingerprint": fingerprint,
-            "snapshot": n,
-            "rows": int(counters.get("rows", -1)),
-            "partitions": int(counters.get("partitions", -1)),
-            "wall_sec": round(time.time() - t0, 3),
-            "committed_at": time.time(),
-            # schema travels with the snapshot: an EMPTY partitioned write
-            # produces no data files and parquet inference would fail
-            "schema": stamped.schema.json(),
-            # the partition spec too, so table-maintenance ops
-            # (compact/append) preserve the layout without being told
-            "partition_by": list(partition_by or []),
-        }
+        return tmp, dict(obs.get), stamped.schema.json()
+
+    def _publish(self, name: str, tmp: str, meta: dict) -> dict:
+        """Commit a staged tree: its _meta.json, the atomic rename to
+        snapshot=<meta["snapshot"]>, then one pipeline_runs.jsonl row."""
         with open(os.path.join(tmp, META), "w") as f:
             json.dump(meta, f)
-        os.rename(tmp, final)
+        os.rename(
+            tmp,
+            os.path.join(self._table_dir(name), f"snapshot={meta['snapshot']}"),
+        )
         with open(os.path.join(self.root, "pipeline_runs.jsonl"), "a") as f:
             f.write(json.dumps(meta) + "\n")
         return meta
@@ -277,19 +291,10 @@ class StageCatalog:
         the table's history short-circuits to the current snapshot —
         the same guard the streaming sinks apply per epoch
         (streaming/ingest._epoch_done)."""
-        if self.was_committed(name, fingerprint):
-            return self.read(spark, name)
-        try:
-            cur = self.read(spark, name).select(*keys, *counters)
-        except FileNotFoundError:
-            cur = None
-        d = delta.select(*keys, *counters)
-        merged = cur.unionByName(d) if cur is not None else d
-        merged = merged.groupBy(*keys).agg(
-            *[F.sum(c).cast("long").alias(c) for c in counters]
+        return self._merge(
+            spark, delta, name, keys, counters,
+            lambda c: F.sum(c).cast("long"), fingerprint,
         )
-        self.write(merged, name, fingerprint)
-        return self.read(spark, name)
 
     def merge_bitmap(
         self,
@@ -307,17 +312,23 @@ class StageCatalog:
         job and, more importantly, so frontier_gate can locate the
         pre-merge snapshot by fingerprint for replay-deterministic
         probing."""
+        return self._merge(
+            spark, delta, name, ["word_idx"], ["word"], F.bit_or, fingerprint
+        )
+
+    def _merge(self, spark, delta, name, keys, values, agg, fingerprint):
+        """Snapshot N+1 = (snapshot N ∪ delta) grouped by ``keys`` with
+        ``agg`` over each ``values`` column; a fingerprint already in
+        the table's history returns the current snapshot unchanged."""
         if self.was_committed(name, fingerprint):
             return self.read(spark, name)
         try:
-            cur = self.read(spark, name).select("word_idx", "word")
+            cur = self.read(spark, name).select(*keys, *values)
         except FileNotFoundError:
             cur = None
-        d = delta.select("word_idx", "word")
+        d = delta.select(*keys, *values)
         merged = cur.unionByName(d) if cur is not None else d
-        merged = merged.groupBy("word_idx").agg(
-            F.expr("bit_or(word)").alias("word")
-        )
+        merged = merged.groupBy(*keys).agg(*[agg(c).alias(c) for c in values])
         self.write(merged, name, fingerprint)
         return self.read(spark, name)
 
@@ -405,47 +416,27 @@ class StageCatalog:
             partition_by = list(prev_meta.get("partition_by") or []) or None
 
         t0 = time.time()
-        from pyspark.sql import Observation
-
-        obs = Observation(f"append:{name}")
-        stamped = (
-            delta.withColumn("_run_id", F.lit(self.run_id))
-            .withColumn("_stage", F.lit(name))
-            .withColumn("_part_id", F.spark_partition_id())
-            .observe(obs, F.count(F.lit(1)).alias("rows"))
+        tmp, counters, schema = self._write_staged(
+            delta, name, f"append:{name}", partition_by
         )
-        tdir = self._table_dir(name)
-        tmp = os.path.join(tdir, f".tmp-{uuid.uuid4().hex[:8]}")
-        writer = _with_bloom_filters(
-            stamped.write.mode("overwrite"), delta.columns
-        )
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(tmp)
-        delta_rows = int(dict(obs.get).get("rows", 0))
+        delta_rows = int(counters.get("rows", 0))
         self._link_tree(prev_dir, tmp)
 
-        n = int(snaps[-1].split("=")[1]) + 1
         meta = {
             "run_id": self.run_id,
             "stage": name,
             "fingerprint": fingerprint,
-            "snapshot": n,
+            "snapshot": self._next_snapshot(name),
             "rows": max(int(prev_meta.get("rows", 0)), 0) + delta_rows,
             "appended_rows": delta_rows,
             "append_of": int(snaps[-1].split("=")[1]),
             "partitions": -1,
             "wall_sec": round(time.time() - t0, 3),
             "committed_at": time.time(),
-            "schema": stamped.schema.json(),
+            "schema": schema,
             "partition_by": list(partition_by or []),
         }
-        with open(os.path.join(tmp, META), "w") as f:
-            json.dump(meta, f)
-        os.rename(tmp, os.path.join(tdir, f"snapshot={n}"))
-        with open(os.path.join(self.root, "pipeline_runs.jsonl"), "a") as f:
-            f.write(json.dumps(meta) + "\n")
-        return meta
+        return self._publish(name, tmp, meta)
 
     def vacuum(
         self, name: str | None = None, grace_sec: float = 3600.0
@@ -495,23 +486,16 @@ class StageCatalog:
                 f"stage table {name!r} has no snapshot {snapshot}"
             )
         tdir = self._table_dir(name)
-        src = os.path.join(tdir, src_dir)
         tmp = os.path.join(tdir, f".tmp-{uuid.uuid4().hex[:8]}")
-        self._link_tree(src, tmp)
-        n = int(self._snapshots(name)[-1].split("=")[1]) + 1
+        self._link_tree(os.path.join(tdir, src_dir), tmp)
         meta = dict(src_meta)
         meta.update(
-            snapshot=n,
+            snapshot=self._next_snapshot(name),
             rollback_of=int(snapshot),
             run_id=self.run_id,
             committed_at=time.time(),
         )
-        with open(os.path.join(tmp, META), "w") as f:
-            json.dump(meta, f)
-        os.rename(tmp, os.path.join(tdir, f"snapshot={n}"))
-        with open(os.path.join(self.root, "pipeline_runs.jsonl"), "a") as f:
-            f.write(json.dumps(meta) + "\n")
-        return meta
+        return self._publish(name, tmp, meta)
 
     def expire_snapshots(self, name: str, keep_last: int = 2) -> list[int]:
         """Retention — the Iceberg `expire_snapshots` analogue: drop all

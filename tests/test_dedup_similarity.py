@@ -741,3 +741,71 @@ def test_lloyd_codebook_matches_reference(spark):
     # all k cells non-empty on this fixture and partition the ids
     assert set(got_assign) == set(range(40))
     assert set(got_assign.values()) == set(range(k))
+
+
+def test_textstats_define_rows_for_pages_without_tokens(spark):
+    """Under ANSI mode an empty or blank page gets a defined row
+    (pred_lang 'other', null ratios) instead of aborting the job with
+    DIVIDE_BY_ZERO."""
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    df = spark.createDataFrame(
+        [(1, ""), (2, "   "), (3, "the cat sat on the mat")],
+        "doc_id long, text string",
+    )
+    lid = {r.doc_id: r.pred_lang for r in lang_id(df).collect()}
+    assert lid == {1: "other", 2: "other", 3: "en"}
+    q = {r.doc_id: r for r in quality_features(df).collect()}
+    for i in (1, 2):
+        assert q[i].n_tokens == 0 and q[i].punct_ratio == 0.0
+        assert q[i].mean_token_len is None and q[i].stopword_ratio is None
+        assert q[i].quality is None
+    assert q[3].n_tokens == 6 and q[3].stopword_ratio == 0.5
+    assert q[3].quality == round(0.06 + 0.1 * 17 / 6 - 0.25, 6)
+
+
+def test_text_oracles_state_engine_rules(spark, tmp_path):
+    """The text_* contract queries run operators/textstats; their DuckDB
+    oracles must agree on pages that hit the branches the contract
+    corpus (lower-case, single-spaced, punctuation-free) never does:
+    CJK text, the stopwords beyond the six most common, punctuation,
+    upper case, tabs/newlines and pages without tokens."""
+    import importlib.util
+    import os
+
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__ as entry
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "check_contract", os.path.join(repo, "tools", "check_contract.py")
+    )
+    check = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(check)
+
+    pages = [
+        (1, "the cat sat on the mat and it was fine", "en"),
+        (2, "中文文本 混合 words", "zh"),
+        (3, "Hello, World! Is THIS ok? Yes: 42 times; 3.5", "en"),
+        (4, "", "en"),
+        (5, "   ", "de"),
+        (6, "tab\tseparated\nlines  with  double  spaces", "en"),
+        (7, "xyz is for abc def ghi jkl mno pqr stu", "en"),
+        (8, "Der Hund schläft im Haus", "de"),
+    ]
+    pd.DataFrame(pages, columns=["doc_id", "text", "lang"]).to_parquet(
+        tmp_path / "documents.parquet"
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'"
+    )
+    qs, oracles = entry.queries(), entry.oracle_sql()
+    for name in ("text_lang_id", "text_token_counts", "text_quality_score"):
+        got = qs[name](spark, str(tmp_path)).toPandas()
+        want = con.execute(oracles[name]).df()
+        assert sorted(got.columns) == sorted(want.columns), name
+        assert check.canonical(got) == check.canonical(want), name
+        if name == "text_lang_id":
+            assert set(got.pred_lang) == {"en", "zh", "other"}
