@@ -6,31 +6,39 @@ asks graph-shaped questions: which entities share neighbors, how densely
 is a neighborhood interconnected, which nodes are structurally central,
 how far is everything from a seed set. The reference's downstream
 consumers do this off-engine; here each op is a first-class distributed
-DataFrame plan designed for the 10^12-triple graph:
+DataFrame plan designed for the 10^12-triple graph, and each has a
+DuckDB twin (`*_oracle_sql`) that the driver contract checks it against.
 
-- co_neighbors: entity similarity via shared neighbors (the user-item-
-  user / item-user-item projection of a bipartite edge set). One
-  self-join on the shared endpoint; per-endpoint fanout is capped BEFORE
-  the join so a celebrity hub cannot produce a quadratic bucket.
-- triangle_count: per-node triangle counts by degree orientation
-  (order every edge from the (degree, id)-smaller endpoint to the
-  larger; enumerate wedges only at the smaller endpoint; close them
-  with a semi-equi-join). Wedge work per node is then O(min-degree²),
-  the MR-standard bound (Suri & Vassilvitskii, WWW'11 — public), not
-  O(max-degree²); hub nodes never enumerate their own wedges.
-- pagerank_int: fixed-iteration PageRank in EXACT integer arithmetic.
-  Ranks live in micro-units (SCALE = 1e9); contributions are integer
-  divisions (rank div outdeg) and the damping step is (85 * sum) div
-  100. Integer addition is exact and commutative, so the result is
-  bit-identical regardless of partitioning, shuffle order, or engine —
-  which is what lets a cross-engine SQL oracle hash-match it, unlike
-  float PageRank where partial-sum order drifts. Dangling mass is
-  dropped (documented; both sides agree). Each iteration is one shuffle
-  (groupBy dst) plus a broadcast-size teleport constant; lineage is cut
-  per iteration so the plan does not grow with iters.
-- bfs_distances: multi-source BFS to max_hops in integer hops.
-  Frontier-join formulation: dist(v) = min over iterations; each hop is
-  one join frontier⋈edges + one min-agg. Exact, deterministic.
+The module is organized by FAMILY: one private Spark loop and one
+private DuckDB-twin builder per family, with each public function
+keeping only the set-up that differs.
+
+- PageRank: pagerank_int, pagerank_int_converged (tolerance stop, warm
+  start), pagerank_int_weighted (weight-split contributions) and
+  pagerank_int_seeded (teleport to a seed set) all run _pagerank around
+  the one iteration body _pr_iteration; their three twins are
+  _pagerank_twin. Ranks are EXACT integer micro-units (PR_SCALE = 1e9,
+  damping DAMPING_PCT/100 by integer division), so the result is
+  bit-identical regardless of partitioning, shuffle order or engine,
+  unlike float PageRank where partial-sum order drifts. Dangling mass
+  is dropped (documented; both sides agree).
+- BFS: bfs_distances (keyed node) and bfs_per_seed (keyed seed, node;
+  harmonic_centrality reads it) run the frontier loop _bfs; twins
+  _bfs_twin.
+- HyperBall: hyperball_harmonic and hyperball_neighborhood read the
+  per-radius ball estimates of _hyperball_ests; twins _hyperball_twin.
+- Peeling and propagation, one loop and one twin each: kcore, ktruss
+  (edge_support), label_propagation, scc, sssp_hops,
+  transitive_closure, hits_int, wl_fingerprints.
+- One-shot joins: co_neighbors, neighbor_jaccard, resource_allocation,
+  co_occurrence_pmi, triangle_count (degree orientation, O(d_min²)
+  wedge work per node — Suri & Vassilvitskii, WWW'11),
+  predicate_implications.
+
+Shared pieces: _node_set (src ∪ dst, distinct) and its SQL form
+_NODES_CTE, _symmetric (the persisted undirected edge list every
+frontier loop probes), undirect, _closed_triangles. Iterative loops
+cut lineage per round, so plans do not grow with the round count.
 
 All outputs are integer or canonically-ordered, so every op here gets a
 hard rows+schema+hash driver oracle (see __spark_entry__.kg_* queries).
@@ -38,12 +46,29 @@ hard rows+schema+hash driver oracle (see __spark_entry__.kg_* queries).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # PageRank micro-unit scale. 1e9 keeps every intermediate (85 * sum of
 # per-node ranks) far below 2^63 even for graphs with ~1e9 nodes.
 PR_SCALE = 1_000_000_000
+# PageRank damping in percent, shared by every variant and its twin.
+DAMPING_PCT = 85
+
+# SQL form of _node_set over a CTE named `e`.
+_NODES_CTE = "nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e)"
+
+
+def _node_set(e: DataFrame) -> DataFrame:
+    """(node): the distinct endpoints (src ∪ dst) of an edge frame.
+    Callers add their own repartition/persist/localCheckpoint."""
+    return (
+        e.select(F.col("src").alias("node"))
+        .unionByName(e.select(F.col("dst").alias("node")))
+        .distinct()
+    )
 
 
 def co_neighbors(
@@ -234,66 +259,139 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     )
 
 
-def pagerank_int(
-    edges: DataFrame, iters: int = 3, damping_pct: int = 85
-) -> DataFrame:
+def pagerank_int(edges: DataFrame, iters: int = 3) -> DataFrame:
     """Fixed-iteration PageRank in exact integer micro-units.
 
     rank_0(v)   = PR_SCALE div n                      (n = |nodes|)
-    teleport    = ((100 - damping_pct) * rank_0) div 100
+    teleport    = ((100 - DAMPING_PCT) * rank_0) div 100
     rank_i(v)   = teleport
-                + (damping_pct * sum_{u->v} (rank_{i-1}(u) div outdeg(u)))
+                + (DAMPING_PCT * sum_{u->v} (rank_{i-1}(u) div outdeg(u)))
                   div 100
 
     Every operation is BIGINT, so the result is independent of shuffle
     partitioning and bit-identical across engines (the property the
     cross-engine oracle needs). Dangling-node mass is dropped rather
     than redistributed — a documented variant choice, mirrored exactly
-    in the SQL oracle. Each iteration: one shuffle (groupBy dst) + a
-    left join back onto the node set so sink nodes keep their teleport
-    mass; lineage is cut per iteration via localCheckpoint so the plan
-    stays O(1) deep regardless of iters.
+    in the SQL oracle. Set-up and loop are the family's shared
+    _pagerank: each iteration is one shuffle (groupBy dst) + a left
+    join back onto the node set so sink nodes keep their teleport mass,
+    and lineage is cut per iteration so the plan stays O(1) deep.
 
     Returns (node, rank) with rank in micro-units (long).
     """
-    e = edges.select("src", "dst").distinct()
-    n_parts = edges.sparkSession.sparkContext.defaultParallelism
-    # Iteration-invariant inputs are PERSISTED PRE-PARTITIONED on their
-    # join keys (not localCheckpoint'd: the PySpark localCheckpoint
-    # round-trip surfaces as UnknownPartitioning, so every iteration
-    # would re-shuffle the full edge list — measured 20s/run extra at
-    # 20M edges). InMemoryRelation keeps its child's hashpartitioning,
-    # so the per-iteration joins exchange only the node-count-sized
-    # rank/contrib side; the one unavoidable big shuffle per iteration
-    # is the groupBy(dst). MEMORY_AND_DISK persist spills instead of
-    # OOMing at scale.
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .repartition(n_parts, "node")
+    return _pagerank(edges.select("src", "dst").distinct(), iters)[0]
+
+
+def _pagerank(
+    e: DataFrame,
+    iters: int,
+    seeds: DataFrame | None = None,
+    seed_ranks: DataFrame | None = None,
+    tol_units: int | None = None,
+) -> tuple[DataFrame, int, bool]:
+    """The one PageRank set-up and loop behind all four variants.
+
+    `e` holds the deduplicated edges: (src, dst) splits rank uniformly
+    (rank div outdeg); (src, dst, w) splits it by weight ((rank * w)
+    div outw). Teleport mass goes to every node, or with `seeds` only
+    to the seeds inside the node set (r0 = PR_SCALE div n_seeds on
+    seeds, 0 elsewhere). `seed_ranks` warm-starts round 0; nodes
+    without a seed row get r0. Without `tol_units` exactly `iters`
+    rounds run; with it the loop stops early once max |rank_i -
+    rank_{i-1}| <= tol_units.
+
+    Iteration-invariant inputs are PERSISTED PRE-PARTITIONED on their
+    join keys (not localCheckpoint'd: the PySpark localCheckpoint
+    round-trip surfaces as UnknownPartitioning, so every iteration
+    would re-shuffle the full edge list — measured 20s/run extra at 20M
+    edges). InMemoryRelation keeps its child's hashpartitioning, so the
+    per-iteration joins exchange only the node-count-sized rank/contrib
+    side; the one unavoidable big shuffle per iteration is the
+    groupBy(dst). MEMORY_AND_DISK persist spills instead of OOMing.
+
+    Returns (rank, rounds_run, converged).
+    """
+    n_parts = e.sparkSession.sparkContext.defaultParallelism
+    nodes = _node_set(e)
+    if seeds is None:
+        nodes = nodes.repartition(n_parts, "node").persist()
+        n = nodes.count()
+        if n == 0:
+            empty = nodes.select("node", F.lit(0).cast("long").alias("rank"))
+            return empty, 0, True
+        r0 = PR_SCALE // n
+        teleport: int | str = ((100 - DAMPING_PCT) * r0) // 100
+        rank = nodes.select("node", F.lit(r0).cast("long").alias("rank"))
+    else:
+        seed_nodes = seeds.select(
+            F.col(seeds.columns[0]).alias("node")
+        ).distinct()
+        n = nodes.join(seed_nodes, "node", "left_semi").count()
+        if n == 0:
+            # a stale/mistyped seed list should fail loudly, not as a
+            # bare ZeroDivisionError three layers down
+            raise ValueError(
+                "pagerank_int_seeded: no seed intersects the graph's node set"
+            )
+        r0 = PR_SCALE // n
+        is_seed = F.col("_seed").isNotNull()
+        nodes = (
+            nodes.join(seed_nodes.withColumn("_seed", F.lit(1)), "node", "left")
+            .select(
+                "node",
+                F.when(is_seed, ((100 - DAMPING_PCT) * r0) // 100)
+                .otherwise(0).cast("long").alias("tp"),
+                F.when(is_seed, r0).otherwise(0).cast("long").alias("r0"),
+            )
+            .repartition(n_parts, "node")
+            .persist()
+        )
+        teleport = "tp"
+        rank = nodes.select("node", F.col("r0").alias("rank"))
+    if seed_ranks is not None:
+        rank = (
+            nodes.join(
+                seed_ranks.select("node", F.col("rank").alias("_seed")),
+                "node",
+                "left",
+            )
+            .select(
+                "node",
+                F.coalesce("_seed", F.lit(r0)).cast("long").alias("rank"),
+            )
+            .localCheckpoint()
+        )
+    if "w" in e.columns:
+        out = F.sum("w").cast("long").alias("outw")
+        contrib_expr = "(rank * w) div outw"
+    else:
+        out = F.count(F.lit(1)).cast("long").alias("outdeg")
+        contrib_expr = "rank div outdeg"
+    links = (
+        e.join(e.groupBy("src").agg(out), "src")
+        .repartition(n_parts, "src")
         .persist()
     )
-    n = nodes.count()
-    if n == 0:
-        return nodes.select(
-            "node", F.lit(0).cast("long").alias("rank")
-        )
-    r0 = PR_SCALE // n
-    teleport = ((100 - damping_pct) * r0) // 100
-    outdeg = e.groupBy("src").agg(
-        F.count(F.lit(1)).cast("long").alias("outdeg")
-    )
-    links = e.join(outdeg, "src").repartition(n_parts, "src").persist()
-    rank = nodes.select("node", F.lit(r0).cast("long").alias("rank"))
-    for _ in range(iters):
-        rank = _pr_iteration(
-            links, rank, nodes, teleport, damping_pct
+    rounds, converged = 0, False
+    while rounds < iters and not converged:
+        new = _pr_iteration(
+            links, rank, nodes, teleport, contrib_expr
         ).localCheckpoint()
+        rounds += 1
+        if tol_units is not None:
+            max_delta = (
+                new.join(
+                    rank.select("node", F.col("rank").alias("_old")), "node"
+                )
+                .agg(F.max(F.abs(F.col("rank") - F.col("_old"))).alias("d"))
+                .collect()[0]["d"]
+            )
+            converged = max_delta is not None and max_delta <= tol_units
+        rank = new
     # rank is localCheckpoint-pinned (eager), so the caches can go
     nodes.unpersist()
     links.unpersist()
-    return rank
+    return rank, rounds, converged
 
 
 def _pr_iteration(
@@ -301,15 +399,13 @@ def _pr_iteration(
     rank: DataFrame,
     nodes: DataFrame,
     teleport: int | str,
-    damping_pct: int,
     contrib_expr: str = "rank div outdeg",
 ) -> DataFrame:
     """One PageRank iteration, un-checkpointed (split out so the plan
     gate in tests/test_plans.py can assert its join strategy). The ONE
-    iteration body for all three variants — uniform, weighted
-    (contrib_expr='(rank * w) div outw'), and seeded (teleport names a
-    per-node COLUMN on `nodes` instead of a constant) — so a join-
-    strategy or damping-arithmetic change cannot silently diverge them.
+    iteration body of _pagerank — uniform, weighted (contrib_expr=
+    '(rank * w) div outw'), and seeded (teleport names a per-node
+    COLUMN on `nodes` instead of a constant).
 
     SHUFFLE_HASH on the rank/contrib side: the links⋈rank join would
     otherwise plan as sort-merge and re-sort the full edge list every
@@ -336,7 +432,7 @@ def _pr_iteration(
     return nodes.join(contrib.hint("shuffle_hash"), "node", "left").select(
         "node",
         (
-            tp + F.expr(f"({damping_pct} * coalesce(s, 0L)) div 100")
+            tp + F.expr(f"({DAMPING_PCT} * coalesce(s, 0L)) div 100")
         ).cast("long").alias("rank"),
     )
 
@@ -344,7 +440,6 @@ def _pr_iteration(
 def pagerank_int_converged(
     edges: DataFrame,
     seed_ranks: DataFrame | None = None,
-    damping_pct: int = 85,
     max_iters: int = 100,
     tol_units: int = 100,
 ) -> tuple[DataFrame, int, bool]:
@@ -373,76 +468,26 @@ def pagerank_int_converged(
     empirical bound well inside that).
 
     Same recurrence, arithmetic, and per-iteration plan as
-    pagerank_int (_pr_iteration: one groupBy(dst) shuffle +
-    shuffle_hash joins against persisted pre-partitioned invariants);
-    the additions are the seed join at round 0 and one O(V) partial-
-    agged max-|delta| probe per round. New nodes absent from the seed
-    get the uniform r0; seed rows for departed nodes drop via the join
-    onto the CURRENT node set.
+    pagerank_int (the shared _pagerank loop); the additions are the
+    seed join at round 0 and one O(V) partial-agged max-|delta| probe
+    per round. New nodes absent from the seed get the uniform r0; seed
+    rows for departed nodes drop via the join onto the CURRENT node
+    set.
 
     Returns (ranks, rounds_run, converged); the explicit flag exists
     because rounds_run == max_iters is AMBIGUOUS — convergence can land
     exactly on the final allowed round (caller decides whether
     converged=False is an error).
     """
-    e = edges.select("src", "dst").distinct()
-    n_parts = edges.sparkSession.sparkContext.defaultParallelism
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .repartition(n_parts, "node")
-        .persist()
+    return _pagerank(
+        edges.select("src", "dst").distinct(),
+        max_iters,
+        seed_ranks=seed_ranks,
+        tol_units=tol_units,
     )
-    n = nodes.count()
-    if n == 0:
-        return nodes.select(
-            "node", F.lit(0).cast("long").alias("rank")
-        ), 0, True
-    r0 = PR_SCALE // n
-    teleport = ((100 - damping_pct) * r0) // 100
-    outdeg = e.groupBy("src").agg(
-        F.count(F.lit(1)).cast("long").alias("outdeg")
-    )
-    links = e.join(outdeg, "src").repartition(n_parts, "src").persist()
-    if seed_ranks is None:
-        rank = nodes.select("node", F.lit(r0).cast("long").alias("rank"))
-    else:
-        rank = nodes.join(
-            seed_ranks.select("node", F.col("rank").alias("_seed")),
-            "node",
-            "left",
-        ).select(
-            "node",
-            F.coalesce("_seed", F.lit(r0)).cast("long").alias("rank"),
-        )
-    rank = rank.localCheckpoint()
-    rounds = 0
-    converged = False
-    for _ in range(max_iters):
-        new = _pr_iteration(
-            links, rank, nodes, teleport, damping_pct
-        ).localCheckpoint()
-        rounds += 1
-        max_delta = (
-            new.join(
-                rank.select("node", F.col("rank").alias("_old")), "node"
-            )
-            .agg(F.max(F.abs(F.col("rank") - F.col("_old"))).alias("d"))
-            .collect()[0]["d"]
-        )
-        rank = new
-        if max_delta is not None and max_delta <= tol_units:
-            converged = True
-            break
-    nodes.unpersist()
-    links.unpersist()
-    return rank, rounds, converged
 
 
-def pagerank_int_weighted(
-    edges: DataFrame, iters: int = 3, damping_pct: int = 85
-) -> DataFrame:
+def pagerank_int_weighted(edges: DataFrame, iters: int = 3) -> DataFrame:
     """Support-weighted PageRank in exact integer micro-units: the KG
     edge table carries observation weights, and a contribution should
     follow the evidence — rank mass splits proportionally to edge
@@ -468,97 +513,121 @@ def pagerank_int_weighted(
         # that convention and is the identity on integer weights
         .agg(F.bround(F.sum("weight")).cast("long").alias("w"))
     )
-    n_parts = edges.sparkSession.sparkContext.defaultParallelism
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .repartition(n_parts, "node")
-        .persist()
-    )
-    n = nodes.count()
-    if n == 0:
-        return nodes.select(
-            "node", F.lit(0).cast("long").alias("rank")
-        )
-    r0 = PR_SCALE // n
-    teleport = ((100 - damping_pct) * r0) // 100
-    outw = e.groupBy("src").agg(F.sum("w").cast("long").alias("outw"))
-    links = e.join(outw, "src").repartition(n_parts, "src").persist()
-    rank = nodes.select("node", F.lit(r0).cast("long").alias("rank"))
-    for _ in range(iters):
-        rank = _pr_iteration(
-            links, rank, nodes, teleport, damping_pct,
-            contrib_expr="(rank * w) div outw",
-        ).localCheckpoint()
-    nodes.unpersist()
-    links.unpersist()
-    return rank
+    return _pagerank(e, iters)[0]
 
 
-def pagerank_weighted_oracle_sql(
-    edges_sql: str, iters: int = 3, damping_pct: int = 85
+def pagerank_int_seeded(
+    edges: DataFrame, seeds: DataFrame, iters: int = 3
+) -> DataFrame:
+    """Personalized PageRank in exact integer micro-units: teleport
+    mass is split over the SEED set only, so rank measures proximity
+    to the seeds instead of global centrality — "importance relative
+    to this entity set", the query a KG consumer asks about a domain
+    (all seed companies, all seed people).
+
+    rank_0(v) = PR_SCALE div n_seeds  if v is a seed, else 0
+    tp(v)     = ((100 - DAMPING_PCT) * rank_0(v)) div 100
+    rank_i(v) = tp(v)
+              + (DAMPING_PCT * sum_{u->v} rank_{i-1}(u) div outdeg(u))
+                div 100
+
+    Same exact-BIGINT discipline as pagerank_int (shuffle-order
+    independent => bit-identical cross-engine); dangling mass dropped;
+    seeds outside the graph's node set are ignored (mirrored in the
+    SQL twin), and a seed list missing the graph entirely raises. The
+    only structural change vs pagerank_int is that the teleport is a
+    per-node COLUMN (NULL-coalesced seed join) instead of a constant,
+    so the per-iteration plan is identical.
+    """
+    return _pagerank(edges.select("src", "dst").distinct(), iters, seeds)[0]
+
+
+def _pagerank_twin(
+    e_sql: str, iters: int, seeds_sql: str | None = None
 ) -> str:
-    """DuckDB twin of pagerank_int_weighted over `edges_sql`
-    (a SELECT yielding src, dst, weight)."""
+    """The one DuckDB twin of _pagerank: the same integer recurrence
+    unrolled as chained CTEs over `e_sql`, a SELECT yielding the
+    deduplicated (src, dst, w). Unweighted twins pass w = 1, where
+    (rank * w) div outw is exactly rank div outdeg. The teleport set
+    `sd` is every node, or the seeds inside the node set.
+
+    `e` and `r0` are MATERIALIZED. DuckDB otherwise inlines `e` at each
+    of its many references, and the multi-threaded plan over the
+    inlined copies returned a different rank set in a few percent of
+    runs on the same input (over sf0.01 and over a 9000-edge in-memory
+    table alike; Spark's side was stable). Materialized once, repeated
+    runs agree, and the query runs faster.
+    """
+    sd = (
+        "SELECT node FROM nodes"
+        if seeds_sql is None
+        else f"SELECT DISTINCT node FROM ({seeds_sql})"
+        " WHERE node IN (SELECT node FROM nodes)"
+    )
     parts = [
-        "WITH e AS (SELECT src, dst, CAST(SUM(weight) AS BIGINT) AS w"
-        f" FROM ({edges_sql}) GROUP BY src, dst)",
-        "nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e)",
-        "n AS (SELECT COUNT(*) AS n FROM nodes)",
+        f"WITH e AS MATERIALIZED ({e_sql})",
+        _NODES_CTE,
+        f"sd AS ({sd})",
+        "ns AS (SELECT COUNT(*) AS n FROM sd)",
         "ow AS (SELECT src, CAST(SUM(w) AS BIGINT) AS outw"
         " FROM e GROUP BY src)",
-        f"r0 AS (SELECT node, CAST({PR_SCALE} // n.n AS BIGINT) AS rank"
-        " FROM nodes, n)",
-        f"tp AS (SELECT ({100 - damping_pct} * rank) // 100 AS t"
-        " FROM r0 LIMIT 1)",
+        f"r0 AS MATERIALIZED (SELECT nodes.node,"
+        f" CAST(CASE WHEN sd.node IS NULL THEN 0"
+        f" ELSE {PR_SCALE} // ns.n END AS BIGINT) AS rank,"
+        f" CAST(CASE WHEN sd.node IS NULL THEN 0"
+        f" ELSE ({100 - DAMPING_PCT} * ({PR_SCALE} // ns.n)) // 100"
+        f" END AS BIGINT) AS tp"
+        " FROM nodes CROSS JOIN ns"
+        " LEFT JOIN sd ON sd.node = nodes.node)",
     ]
     prev = "r0"
     for i in range(1, iters + 1):
         parts.append(
-            f"r{i} AS (SELECT nodes.node, CAST(tp.t + "
-            f"({damping_pct} * COALESCE(SUM(({prev}.rank * e.w) // ow.outw), 0))"
+            f"r{i} AS (SELECT nodes.node, CAST(t.tp + ({DAMPING_PCT} *"
+            f" COALESCE(SUM(({prev}.rank * e.w) // ow.outw), 0))"
             " // 100 AS BIGINT) AS rank"
-            f" FROM nodes CROSS JOIN tp"
-            f" LEFT JOIN e ON e.dst = nodes.node"
+            " FROM nodes"
+            " JOIN r0 t ON t.node = nodes.node"
+            " LEFT JOIN e ON e.dst = nodes.node"
             f" LEFT JOIN {prev} ON {prev}.node = e.src"
-            f" LEFT JOIN ow ON ow.src = e.src"
-            " GROUP BY nodes.node, tp.t)"
+            " LEFT JOIN ow ON ow.src = e.src"
+            " GROUP BY nodes.node, t.tp)"
         )
         prev = f"r{i}"
     return ",\n".join(parts) + f"\nSELECT node, rank FROM {prev}"
 
 
-def pagerank_oracle_sql(
-    edges_sql: str, iters: int = 3, damping_pct: int = 85
+def pagerank_oracle_sql(edges_sql: str, iters: int = 3) -> str:
+    """DuckDB twin of pagerank_int over `edges_sql` (a SELECT yielding
+    src, dst)."""
+    return _pagerank_twin(
+        "SELECT DISTINCT src, dst, CAST(1 AS BIGINT) AS w"
+        f" FROM ({edges_sql})",
+        iters,
+    )
+
+
+def pagerank_weighted_oracle_sql(edges_sql: str, iters: int = 3) -> str:
+    """DuckDB twin of pagerank_int_weighted over `edges_sql`
+    (a SELECT yielding src, dst, weight)."""
+    return _pagerank_twin(
+        "SELECT src, dst, CAST(SUM(weight) AS BIGINT) AS w"
+        f" FROM ({edges_sql}) GROUP BY src, dst",
+        iters,
+    )
+
+
+def pagerank_seeded_oracle_sql(
+    edges_sql: str, seeds_sql: str, iters: int = 3
 ) -> str:
-    """DuckDB twin of pagerank_int: the same integer recurrence unrolled
-    as chained CTEs over `edges_sql` (a SELECT yielding src, dst)."""
-    parts = [
-        f"WITH e AS (SELECT DISTINCT src, dst FROM ({edges_sql}))",
-        "nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e)",
-        "n AS (SELECT COUNT(*) AS n FROM nodes)",
-        "od AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS outdeg"
-        " FROM e GROUP BY src)",
-        f"r0 AS (SELECT node, CAST({PR_SCALE} // n.n AS BIGINT) AS rank"
-        " FROM nodes, n)",
-        f"tp AS (SELECT ({100 - damping_pct} * rank) // 100 AS t"
-        " FROM r0 LIMIT 1)",
-    ]
-    prev = "r0"
-    for i in range(1, iters + 1):
-        parts.append(
-            f"r{i} AS (SELECT nodes.node, CAST(tp.t + "
-            f"({damping_pct} * COALESCE(SUM({prev}.rank // od.outdeg), 0))"
-            " // 100 AS BIGINT) AS rank"
-            f" FROM nodes CROSS JOIN tp"
-            f" LEFT JOIN e ON e.dst = nodes.node"
-            f" LEFT JOIN {prev} ON {prev}.node = e.src"
-            f" LEFT JOIN od ON od.src = e.src"
-            " GROUP BY nodes.node, tp.t)"
-        )
-        prev = f"r{i}"
-    return ",\n".join(parts) + f"\nSELECT node, rank FROM {prev}"
+    """DuckDB twin of pagerank_int_seeded: per-node teleport from the
+    seed set inside the node set."""
+    return _pagerank_twin(
+        "SELECT DISTINCT src, dst, CAST(1 AS BIGINT) AS w"
+        f" FROM ({edges_sql})",
+        iters,
+        seeds_sql,
+    )
 
 
 def bfs_distances(
@@ -566,23 +635,52 @@ def bfs_distances(
 ) -> DataFrame:
     """Multi-source BFS over the UNDIRECTED expansion of (src, dst), up
     to max_hops. `seeds` is a one-column DataFrame (node). Returns
-    (node, dist) for every reached node, dist in [0, max_hops].
-
-    Frontier formulation: hop i joins the hop-(i-1) frontier against
-    the symmetric edge list, anti-joins out already-visited nodes, and
-    localCheckpoints the new frontier — each hop is one shuffle join on
-    the frontier (small side broadcast-able when the frontier is),
-    never a pass over the full visited set.
+    (node, dist) for every reached node, dist in [0, max_hops]: the
+    shared _bfs loop keyed by node alone.
     """
-    # hop-invariant edge list persisted pre-partitioned on the probe
-    # key (_symmetric), same rationale as pagerank_int: only the
-    # frontier (the small, changing side) moves per hop.
+    return _bfs(
+        edges, seeds.select(F.col(seeds.columns[0]).alias("node")), max_hops
+    )
+
+
+def bfs_per_seed(
+    edges: DataFrame, seeds: DataFrame, max_hops: int = 3
+) -> DataFrame:
+    """Per-seed BFS over the undirected expansion: (seed, node, dist)
+    for every node reached from each seed within max_hops — the
+    distance MATRIX restricted to a seed sample, where bfs_distances
+    collapses to the min over the seed set.
+
+    The shared _bfs loop keyed (seed, node), so memory is |seeds| x
+    reachable — the operator is built for a SAMPLE of seeds (landmark
+    methods), not all-pairs.
+    """
+    s = F.col(seeds.columns[0])
+    return _bfs(edges, seeds.select(s.alias("seed"), s.alias("node")), max_hops)
+
+
+def _bfs(edges: DataFrame, start: DataFrame, max_hops: int) -> DataFrame:
+    """The one BFS frontier loop. `start` holds the hop-0 keys, its
+    LAST column named node; any earlier key column (seed) rides along
+    each hop unchanged. Returns start's columns + dist for every key
+    reached within max_hops.
+
+    Hop i joins the hop-(i-1) frontier against the symmetric edge list,
+    anti-joins out already-visited keys, and localCheckpoints the new
+    frontier — each hop is one shuffle join on the frontier, never a
+    pass over the full visited set. The hop-invariant edge list is
+    persisted pre-partitioned on the probe key (_symmetric), same
+    rationale as _pagerank: only the frontier (the small, changing
+    side) moves per hop.
+    """
+    keys = start.columns
     sym = _symmetric(edges, "src")
-    visited = seeds.select(
-        F.col(seeds.columns[0]).alias("node"),
-        F.lit(0).cast("long").alias("dist"),
-    ).distinct().localCheckpoint()
-    frontier = visited.select("node")
+    visited = (
+        start.withColumn("dist", F.lit(0).cast("long"))
+        .distinct()
+        .localCheckpoint()
+    )
+    frontier = visited.select(*keys)
     for hop in range(1, max_hops + 1):
         nxt = (
             sym.join(
@@ -591,49 +689,88 @@ def bfs_distances(
                 ),
                 "src",
             )
-            .select(F.col("dst").alias("node"))
+            .select(*keys[:-1], F.col("dst").alias("node"))
             .distinct()
-            .join(visited.select("node"), "node", "left_anti")
+            .join(visited.select(*keys), keys, "left_anti")
             .localCheckpoint()
         )
         if nxt.isEmpty():
             break
         visited = visited.unionByName(
-            nxt.select("node", F.lit(hop).cast("long").alias("dist"))
+            nxt.withColumn("dist", F.lit(hop).cast("long"))
         ).localCheckpoint()
         frontier = nxt
     sym.unpersist()
     return visited
 
 
-def bfs_oracle_sql(
-    edges_sql: str, seeds_sql: str, max_hops: int = 3
+def harmonic_centrality(
+    edges: DataFrame, seeds: DataFrame, max_hops: int = 3
+) -> DataFrame:
+    """Sampled harmonic centrality: for each reached node, the sum of
+    1e6 div dist over the seed sample (self-distances excluded) — the
+    landmark estimator of SUM(1/d(u, v)); integer division keeps the
+    score engine-exact. -> (node, n_seeds_reaching, harmonic_e6).
+    """
+    d = bfs_per_seed(edges, seeds, max_hops).filter(F.col("dist") > 0)
+    return d.groupBy("node").agg(
+        F.count(F.lit(1)).cast("long").alias("n_seeds_reaching"),
+        F.sum(F.expr("1000000 div dist")).cast("long").alias("harmonic_e6"),
+    )
+
+
+def _bfs_twin(
+    edges_sql: str, seeds_sql: str, max_hops: int, seed: str
 ) -> str:
-    """DuckDB twin of bfs_distances: hop CTEs unrolled; dist(v) = the
-    first hop at which v appears (min over the union)."""
+    """The one DuckDB twin of _bfs: hop CTEs h0..h{max_hops} unrolled
+    over the symmetric edges, ending in `reached` (seed, node, dist),
+    dist = the first hop at which (seed, node) appears. `seed` is the
+    hop-0 expression of the seed key: `node` keeps one BFS per seed,
+    a constant merges all seeds into one multi-source BFS. Callers
+    append the final SELECT."""
     parts = [
         f"WITH e0 AS (SELECT src, dst FROM ({edges_sql}))",
         "sym AS (SELECT DISTINCT src, dst FROM"
         " (SELECT src, dst FROM e0 UNION ALL"
         "  SELECT dst AS src, src AS dst FROM e0))",
-        f"h0 AS (SELECT DISTINCT node, CAST(0 AS BIGINT) AS dist"
-        f" FROM ({seeds_sql}))",
+        f"h0 AS (SELECT DISTINCT {seed} AS seed, node,"
+        f" CAST(0 AS BIGINT) AS dist FROM ({seeds_sql}))",
     ]
-    reach = ["SELECT node, dist FROM h0"]
-    prev = "h0"
     for i in range(1, max_hops + 1):
         parts.append(
-            f"h{i} AS (SELECT DISTINCT sym.dst AS node,"
+            f"h{i} AS (SELECT DISTINCT h{i - 1}.seed, sym.dst AS node,"
             f" CAST({i} AS BIGINT) AS dist"
-            f" FROM sym JOIN {prev} ON sym.src = {prev}.node)"
+            f" FROM sym JOIN h{i - 1} ON sym.src = h{i - 1}.node)"
         )
-        reach.append(f"SELECT node, dist FROM h{i}")
-        prev = f"h{i}"
+    hops = " UNION ALL ".join(
+        f"SELECT seed, node, dist FROM h{i}" for i in range(max_hops + 1)
+    )
+    parts.append(
+        f"reached AS (SELECT seed, node, MIN(dist) AS dist FROM ({hops})"
+        " GROUP BY seed, node)"
+    )
+    return ",\n".join(parts)
+
+
+def bfs_oracle_sql(
+    edges_sql: str, seeds_sql: str, max_hops: int = 3
+) -> str:
+    """DuckDB twin of bfs_distances."""
     return (
-        ",\n".join(parts)
-        + "\nSELECT node, MIN(dist) AS dist FROM ("
-        + " UNION ALL ".join(reach)
-        + ") GROUP BY node"
+        _bfs_twin(edges_sql, seeds_sql, max_hops, seed="0")
+        + "\nSELECT node, dist FROM reached"
+    )
+
+
+def harmonic_oracle_sql(
+    edges_sql: str, seeds_sql: str, max_hops: int = 3
+) -> str:
+    """DuckDB twin of harmonic_centrality."""
+    return (
+        _bfs_twin(edges_sql, seeds_sql, max_hops, seed="node")
+        + "\nSELECT node, CAST(COUNT(*) AS BIGINT) AS n_seeds_reaching,"
+        " CAST(SUM(1000000 // dist) AS BIGINT) AS harmonic_e6"
+        " FROM reached WHERE dist > 0 GROUP BY node"
     )
 
 
@@ -766,128 +903,6 @@ def kcore_oracle_sql(edges_sql: str, k: int, rounds: int) -> str:
         )
         prev = f"s{i}"
     return ",\n".join(parts) + f"\nSELECT node, deg FROM a{rounds}"
-
-
-def pagerank_int_seeded(
-    edges: DataFrame,
-    seeds: DataFrame,
-    iters: int = 3,
-    damping_pct: int = 85,
-) -> DataFrame:
-    """Personalized PageRank in exact integer micro-units: teleport
-    mass is split over the SEED set only, so rank measures proximity
-    to the seeds instead of global centrality — "importance relative
-    to this entity set", the query a KG consumer asks about a domain
-    (all seed companies, all seed people).
-
-    rank_0(v) = PR_SCALE div n_seeds  if v is a seed, else 0
-    tp(v)     = ((100 - damping_pct) * rank_0(v)) div 100
-    rank_i(v) = tp(v)
-              + (damping_pct * sum_{u->v} rank_{i-1}(u) div outdeg(u))
-                div 100
-
-    Same exact-BIGINT discipline as pagerank_int (shuffle-order
-    independent => bit-identical cross-engine); dangling mass dropped;
-    seeds outside the graph's node set are ignored (mirrored in the
-    SQL twin). The only structural change vs pagerank_int is that the
-    teleport is a per-node COLUMN (NULL-coalesced seed join) instead
-    of a constant, so the per-iteration plan is identical: one
-    groupBy(dst) shuffle + a shuffle_hash join back onto nodes.
-    """
-    e = edges.select("src", "dst").distinct()
-    n_parts = edges.sparkSession.sparkContext.defaultParallelism
-    nodes_plain = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    seed_nodes = seeds.select(
-        F.col(seeds.columns[0]).alias("node")
-    ).distinct()
-    n_seeds = nodes_plain.join(seed_nodes, "node", "left_semi").count()
-    if n_seeds == 0:
-        # a stale/mistyped seed list should fail loudly, not as a bare
-        # ZeroDivisionError three layers down
-        raise ValueError(
-            "pagerank_int_seeded: no seed intersects the graph's node set"
-        )
-    r0 = PR_SCALE // n_seeds
-    tp = ((100 - damping_pct) * r0) // 100
-    nodes = (
-        nodes_plain.join(
-            seed_nodes.withColumn("_seed", F.lit(1)), "node", "left"
-        )
-        .select(
-            "node",
-            F.when(F.col("_seed") == 1, F.lit(tp))
-            .otherwise(F.lit(0))
-            .cast("long")
-            .alias("tp"),
-            F.when(F.col("_seed") == 1, F.lit(r0))
-            .otherwise(F.lit(0))
-            .cast("long")
-            .alias("r0"),
-        )
-        .repartition(n_parts, "node")
-        .persist()
-    )
-    outdeg = e.groupBy("src").agg(
-        F.count(F.lit(1)).cast("long").alias("outdeg")
-    )
-    links = e.join(outdeg, "src").repartition(n_parts, "src").persist()
-    rank = nodes.select("node", F.col("r0").alias("rank"))
-    for _ in range(iters):
-        rank = _pr_iteration(
-            links, rank, nodes, "tp", damping_pct
-        ).localCheckpoint()
-    nodes.unpersist()
-    links.unpersist()
-    return rank
-
-
-def pagerank_seeded_oracle_sql(
-    edges_sql: str,
-    seeds_sql: str,
-    iters: int = 3,
-    damping_pct: int = 85,
-) -> str:
-    """DuckDB twin of pagerank_int_seeded: same integer recurrence,
-    per-node teleport from a LEFT JOIN against the seed set, unrolled
-    as chained CTEs (each round references the previous ONCE, so plain
-    inlining stays linear — no MATERIALIZED needed)."""
-    parts = [
-        f"WITH e AS (SELECT DISTINCT src, dst FROM ({edges_sql}))",
-        "nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e)",
-        f"sd AS (SELECT DISTINCT node FROM ({seeds_sql})"
-        " WHERE node IN (SELECT node FROM nodes))",
-        "ns AS (SELECT COUNT(*) AS n FROM sd)",
-        "od AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS outdeg"
-        " FROM e GROUP BY src)",
-        f"r0 AS (SELECT nodes.node,"
-        f" CAST(CASE WHEN sd.node IS NULL THEN 0"
-        f" ELSE {PR_SCALE} // ns.n END AS BIGINT) AS rank,"
-        f" CAST(CASE WHEN sd.node IS NULL THEN 0"
-        f" ELSE ({100 - damping_pct} * ({PR_SCALE} // ns.n)) // 100"
-        f" END AS BIGINT) AS tp"
-        " FROM nodes CROSS JOIN ns"
-        " LEFT JOIN sd ON sd.node = nodes.node)",
-    ]
-    prev = "r0"
-    for i in range(1, iters + 1):
-        parts.append(
-            f"r{i} AS (SELECT nodes.node, CAST(t.tp + "
-            f"({damping_pct} * COALESCE(SUM({prev}.rank // od.outdeg), 0))"
-            " // 100 AS BIGINT) AS rank,"
-            " t.tp AS tp"
-            f" FROM nodes"
-            f" JOIN r0 t ON t.node = nodes.node"
-            f" LEFT JOIN e ON e.dst = nodes.node"
-            f" LEFT JOIN {prev} ON {prev}.node = e.src"
-            f" LEFT JOIN od ON od.src = e.src"
-            " GROUP BY nodes.node, t.tp)"
-        )
-        prev = f"r{i}"
-    return ",\n".join(parts) + f"\nSELECT node, rank FROM {prev}"
 
 
 def resource_allocation(
@@ -1192,103 +1207,6 @@ def co_occurrence_pmi(
     )
 
 
-def bfs_per_seed(
-    edges: DataFrame, seeds: DataFrame, max_hops: int = 3
-) -> DataFrame:
-    """Per-seed BFS over the undirected expansion: (seed, node, dist)
-    for every node reached from each seed within max_hops — the
-    distance MATRIX restricted to a seed sample, where bfs_distances
-    collapses to the min over the seed set.
-
-    Same frontier shape as bfs_distances (persisted pre-partitioned
-    symmetric edges, shuffle_hash frontier joins, per-hop lineage
-    cuts); state is keyed (seed, node), so memory is |seeds| x
-    reachable — the operator is built for a SAMPLE of seeds (landmark
-    methods), not all-pairs.
-    """
-    sym = _symmetric(edges, "src")
-    visited = seeds.select(
-        F.col(seeds.columns[0]).alias("seed"),
-        F.col(seeds.columns[0]).alias("node"),
-        F.lit(0).cast("long").alias("dist"),
-    ).distinct().localCheckpoint()
-    frontier = visited.select("seed", "node")
-    for hop in range(1, max_hops + 1):
-        nxt = (
-            sym.join(
-                frontier.withColumnRenamed("node", "src").hint(
-                    "shuffle_hash"
-                ),
-                "src",
-            )
-            .select("seed", F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("seed", "node"), ["seed", "node"], "left_anti")
-            .localCheckpoint()
-        )
-        if nxt.isEmpty():
-            break
-        visited = visited.unionByName(
-            nxt.select(
-                "seed", "node", F.lit(hop).cast("long").alias("dist")
-            )
-        ).localCheckpoint()
-        frontier = nxt.select("seed", "node")
-    sym.unpersist()
-    return visited
-
-
-def harmonic_centrality(
-    edges: DataFrame, seeds: DataFrame, max_hops: int = 3
-) -> DataFrame:
-    """Sampled harmonic centrality: for each reached node, the sum of
-    1e6 div dist over the seed sample (self-distances excluded) — the
-    landmark estimator of SUM(1/d(u, v)); integer division keeps the
-    score engine-exact. -> (node, n_seeds_reaching, harmonic_e6).
-    """
-    d = bfs_per_seed(edges, seeds, max_hops).filter(F.col("dist") > 0)
-    return d.groupBy("node").agg(
-        F.count(F.lit(1)).cast("long").alias("n_seeds_reaching"),
-        F.sum(F.expr("1000000 div dist")).cast("long").alias("harmonic_e6"),
-    )
-
-
-def harmonic_oracle_sql(
-    edges_sql: str, seeds_sql: str, max_hops: int = 3
-) -> str:
-    """DuckDB twin of harmonic_centrality: per-seed hop CTEs unrolled;
-    dist = first hop at which (seed, node) appears."""
-    parts = [
-        f"WITH e0h AS (SELECT src, dst FROM ({edges_sql}))",
-        "symh AS (SELECT DISTINCT src, dst FROM"
-        " (SELECT src, dst FROM e0h UNION ALL"
-        "  SELECT dst AS src, src AS dst FROM e0h))",
-        f"p0 AS (SELECT DISTINCT node AS seed, node,"
-        f" CAST(0 AS BIGINT) AS dist FROM ({seeds_sql}))",
-    ]
-    reach = ["SELECT seed, node, dist FROM p0"]
-    prev = "p0"
-    for i in range(1, max_hops + 1):
-        parts.append(
-            f"p{i} AS (SELECT DISTINCT {prev}.seed, symh.dst AS node,"
-            f" CAST({i} AS BIGINT) AS dist"
-            f" FROM symh JOIN {prev} ON symh.src = {prev}.node)"
-        )
-        reach.append(f"SELECT seed, node, dist FROM p{i}")
-        prev = f"p{i}"
-    union = " UNION ALL ".join(reach)
-    return (
-        ",\n".join(parts)
-        + f""",
-allh AS ({union}),
-firsth AS (SELECT seed, node, MIN(dist) AS dist FROM allh
-           GROUP BY seed, node)
-SELECT node, CAST(COUNT(*) AS BIGINT) AS n_seeds_reaching,
-       CAST(SUM(1000000 // dist) AS BIGINT) AS harmonic_e6
-FROM firsth WHERE dist > 0 GROUP BY node"""
-    )
-
-
 def predicate_implications(
     triples: DataFrame, min_support: int = 1
 ) -> DataFrame:
@@ -1506,12 +1424,7 @@ def scc(
         .distinct()
         .localCheckpoint()
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
+    nodes = _node_set(e).localCheckpoint()
     settled = nodes.limit(0).select("node", F.col("node").alias("scc_id"))
     for _ in range(max_rounds):
         if nodes.isEmpty():
@@ -1715,13 +1628,7 @@ def hits_int(edges: DataFrame, iters: int = 3) -> DataFrame:
     e = edges.select("src", "dst").distinct()
     spark = edges.sparkSession
     n_parts = spark.sparkContext.defaultParallelism
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .repartition(n_parts, "node")
-        .persist()
-    )
+    nodes = _node_set(e).repartition(n_parts, "node").persist()
     if nodes.isEmpty():
         return nodes.select(
             "node",
@@ -1786,7 +1693,7 @@ def hits_oracle_sql(edges_sql: str, iters: int = 3) -> str:
     s = HITS_SCALE
     parts = [
         f"WITH e AS (SELECT DISTINCT src, dst FROM ({edges_sql}))",
-        "nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e)",
+        _NODES_CTE,
         f"h0 AS (SELECT node, CAST({s} AS BIGINT) AS score FROM nodes)",
     ]
     prev_h = "h0"
@@ -1862,13 +1769,7 @@ def wl_fingerprints(edges: DataFrame, iters: int = 2) -> DataFrame:
     indeg = e.groupBy(F.col("dst").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("id_")
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .repartition(n_parts, "node")
-        .persist()
-    )
+    nodes = _node_set(e).repartition(n_parts, "node").persist()
     lbl = (
         nodes.join(outdeg, "node", "left")
         .join(indeg, "node", "left")
@@ -1933,7 +1834,7 @@ def wl_oracle_sql(edges_sql: str, iters: int = 2) -> str:
     string_agg(... ORDER BY ...) as the canonical multiset join."""
     parts = [
         f"WITH e AS (SELECT DISTINCT src, dst FROM ({edges_sql}))",
-        "nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e)",
+        _NODES_CTE,
         "od AS (SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS d"
         " FROM e GROUP BY src)",
         "idg AS (SELECT dst AS node, CAST(COUNT(*) AS BIGINT) AS d"
@@ -1967,156 +1868,95 @@ def wl_oracle_sql(edges_sql: str, iters: int = 2) -> str:
     return ",\n".join(parts) + f"\nSELECT node, wl FROM {prev}"
 
 
-def hyperball_harmonic(edges: DataFrame, radius: int = 3) -> DataFrame:
-    """HyperBall (Boldi & Vigna, 2013 — "In-core computation of
-    geometric centralities with HyperBall", the published algorithm
-    behind web-graph centrality at billions of nodes): per-node HLL
-    counters of the ball B(v, t) = {v} ∪ ⋃_{v→u} B(u, t-1), advanced
-    by max-merging each node's registers with its successors', then
-    harmonic-style centrality from the ball-size increments:
-
-        harmonic_e6(v) = Σ_{t=1..radius} (|B(v,t)| - |B(v,t-1)|)
-                          * 1_000_000 div t
-
-    Balls follow OUT-edges (nodes reachable FROM v); pass the REVERSED
-    edge list for the textbook harmonic centrality (incoming
-    distances), which is how Boldi & Vigna run it.
+def _hyperball_ests(edges: DataFrame, radius: int) -> list[DataFrame]:
+    """The one HyperBall loop (Boldi & Vigna, 2013 — "In-core
+    computation of geometric centralities with HyperBall", the
+    published algorithm behind web-graph centrality at billions of
+    nodes): per-node HLL counters of the ball B(v, t) = {v} ∪
+    ⋃_{v→u} B(u, t-1), advanced by max-merging each node's registers
+    with its successors'. Returns the (node, est) ball-size estimates
+    for t = 0..radius; callers read each radius off them.
 
     Engine-exact: registers come from the repo's integer HLL
     (operators/sketches — md5_long48 hash, exact BIGINT estimator) and
-    max-merge is bitwise deterministic, so ball estimates and the
-    div-t accumulation hash-match the unrolled DuckDB twin. The
-    low-cardinality bias of the raw HLL estimator is irrelevant here:
-    both engines compute the identical biased value, and the estimate
-    is monotone under register merges so increments stay >= 0.
+    max-merge is bitwise deterministic, so every estimate hash-matches
+    the unrolled DuckDB twin. The low-cardinality bias of the raw HLL
+    estimator is irrelevant here: both engines compute the identical
+    biased value, and the estimate is monotone under register merges.
 
     Scale shape: state is <= HLL_M registers per node (the paper's
     point — constant per node regardless of ball size); each iteration
     is one (node, bucket)-keyed max-merge shuffle against an edge copy
     persisted pre-partitioned on its join key. radius is small (web
     distances are short); lineage is cut per iteration.
-
-    Returns (node, ball_r, harmonic_e6), ball_r = |B(v, radius)| est.
     """
     from .negatives import md5_long48
     from .sketches import HLL_M, _hll_rho, hll_estimate
 
     e = edges.select("src", "dst").distinct()
-    spark = edges.sparkSession
-    n_parts = spark.sparkContext.defaultParallelism
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .repartition(n_parts, "node")
-        .persist()
-    )
+    n_parts = e.sparkSession.sparkContext.defaultParallelism
     h = md5_long48(F.col("node").cast("string"))
-    regs = nodes.select(
-        "node",
-        (h % F.lit(HLL_M)).cast("long").alias("bucket"),
-        _hll_rho(h).alias("reg"),
-    ).localCheckpoint()
+    regs = (
+        _node_set(e)
+        .repartition(n_parts, "node")
+        .select(
+            "node",
+            (h % F.lit(HLL_M)).cast("long").alias("bucket"),
+            _hll_rho(h).alias("reg"),
+        )
+        .localCheckpoint()
+    )
     e_by_dst = e.repartition(n_parts, "dst").persist()
-
-    def est_of(r):
-        return hll_estimate(r, ["node"]).select(
-            "node", F.col("distinct_est").alias("est")
-        )
-
-    harm = None
-    prev = est_of(regs)
-    for t in range(1, radius + 1):
-        nbr = e_by_dst.join(
-            regs.withColumnRenamed("node", "dst"), "dst"
-        ).select(F.col("src").alias("node"), "bucket", "reg")
-        regs = (
-            regs.unionByName(nbr)
-            .groupBy("node", "bucket")
-            .agg(F.max("reg").cast("long").alias("reg"))
-            .localCheckpoint()
-        )
-        cur = est_of(regs)
-        inc = (
-            cur.withColumnRenamed("est", "cur")
-            .join(prev.withColumnRenamed("est", "prev"), "node")
-            .select(
-                "node",
-                F.expr(f"((cur - prev) * 1000000) div {t}").alias("_i"),
+    ests = []
+    for t in range(radius + 1):
+        if t:
+            nbr = e_by_dst.join(
+                regs.withColumnRenamed("node", "dst"), "dst"
+            ).select(F.col("src").alias("node"), "bucket", "reg")
+            regs = (
+                regs.unionByName(nbr)
+                .groupBy("node", "bucket")
+                .agg(F.max("reg").cast("long").alias("reg"))
+                .localCheckpoint()
+            )
+        ests.append(
+            hll_estimate(regs, ["node"]).select(
+                "node", F.col("distinct_est").alias("est")
             )
         )
-        harm = (
-            inc.withColumnRenamed("_i", "harm")
-            if harm is None
-            else harm.join(inc, "node").select(
-                "node", (F.col("harm") + F.col("_i")).alias("harm")
-            )
-        )
-        prev = cur
-    out = prev.join(harm, "node").select(
-        "node",
-        F.col("est").cast("long").alias("ball_r"),
-        F.col("harm").cast("long").alias("harmonic_e6"),
-    )
-    nodes.unpersist()
     e_by_dst.unpersist()
-    return out
+    return ests
 
 
-def hyperball_oracle_sql(edges_sql: str, radius: int = 3) -> str:
-    """DuckDB twin of hyperball_harmonic: unrolled register max-merges
-    + the same exact-BIGINT HLL estimator per radius."""
-    from .negatives import md5_long48_sql
-    from .sketches import _HLL_DEN, _HLL_NUM, _HLL_RANK_MAX, HLL_M
+def hyperball_harmonic(edges: DataFrame, radius: int = 3) -> DataFrame:
+    """HyperBall harmonic-style centrality from the ball-size
+    increments of the shared _hyperball_ests loop:
 
-    r = _HLL_RANK_MAX
-    h = md5_long48_sql("CAST(node AS VARCHAR)")
-    parts = [
-        f"WITH e AS (SELECT DISTINCT src, dst FROM ({edges_sql}))",
-        "nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e)",
-        f"""r0 AS (
-  SELECT node, ({h}) % {HLL_M} AS bucket,
-         CASE WHEN ({h}) // {HLL_M} = 0 THEN {r}
-              ELSE {r} - LENGTH(bin(({h}) // {HLL_M})) END AS reg
-  FROM nodes)""",
-    ]
+        harmonic_e6(v) = Σ_{t=1..radius} (|B(v,t)| - |B(v,t-1)|)
+                          * 1_000_000 div t
 
-    def est(tag, src_cte):
-        return f"""{tag} AS (
-  SELECT node,
-         CAST({_HLL_NUM}::BIGINT // ({_HLL_DEN} *
-              (SUM(1::BIGINT << ({r} - reg))
-               + ({HLL_M} - COUNT(*)) * {1 << r}::BIGINT)) AS BIGINT)
-           AS est
-  FROM {src_cte} GROUP BY node)"""
+    Balls follow OUT-edges (nodes reachable FROM v); pass the REVERSED
+    edge list for the textbook harmonic centrality (incoming
+    distances), which is how Boldi & Vigna run it. Increments stay >= 0
+    because the estimate is monotone under register merges.
 
-    parts.append(est("e0", "r0"))
+    Returns (node, ball_r, harmonic_e6), ball_r = |B(v, radius)| est.
+    """
+    ests = _hyperball_ests(edges, radius)
+    balls = ests[0].withColumnRenamed("est", "b0")
     for t in range(1, radius + 1):
-        parts.append(
-            f"""r{t} AS MATERIALIZED (
-  SELECT node, bucket, MAX(reg) AS reg FROM (
-    SELECT node, bucket, reg FROM r{t - 1}
-    UNION ALL
-    SELECT e.src AS node, p.bucket, p.reg
-    FROM e JOIN r{t - 1} p ON p.node = e.dst)
-  GROUP BY node, bucket)"""
-        )
-        parts.append(est(f"e{t}", f"r{t}"))
-    harm = " + ".join(
-        f"((e{t}.est - e{t - 1}.est) * 1000000) // {t}"
-        for t in range(1, radius + 1)
+        balls = balls.join(ests[t].withColumnRenamed("est", f"b{t}"), "node")
+    harm = sum(
+        (
+            F.expr(f"((b{t} - b{t - 1}) * 1000000) div {t}")
+            for t in range(1, radius + 1)
+        ),
+        F.lit(0),
     )
-    joins = "\n".join(
-        f"JOIN e{t} ON e{t}.node = e0.node" for t in range(1, radius + 1)
-    )
-    return (
-        ",\n".join(parts)
-        + f"""
-SELECT e0.node,
-       CAST(e{radius}.est AS BIGINT) AS ball_r,
-       CAST({harm} AS BIGINT) AS harmonic_e6
-FROM e0
-{joins}"""
+    return balls.select(
+        "node",
+        F.col(f"b{radius}").cast("long").alias("ball_r"),
+        harm.cast("long").alias("harmonic_e6"),
     )
 
 
@@ -2125,64 +1965,30 @@ def hyperball_neighborhood(edges: DataFrame, radius: int = 3) -> DataFrame:
     HyperBall — the statistic behind every "average distance of the
     web graph" / effective-diameter measurement (Palmer et al. KDD'02
     ANF; Boldi-Vigna; the Broder bow-tie line of work — all public).
-    Same per-node HLL counters as hyperball_harmonic, folded to one
-    corpus-wide sum per radius; the downstream effective-diameter
-    read-off (smallest t with N(t) >= 0.9 * N(radius)) is a driver-side
-    scan of `radius` rows.
-
-    Engine-exact for the same reason as hyperball_harmonic: per-node
-    estimates are exact BIGINT, and their sum is order-independent.
+    The per-node estimates of the shared _hyperball_ests loop, folded to
+    one corpus-wide sum per radius (exact BIGINT, so the sum is
+    order-independent); the downstream effective-diameter read-off
+    (smallest t with N(t) >= 0.9 * N(radius)) is a driver-side scan of
+    `radius` rows.
 
     -> (t, reach_sum) for t in 0..radius."""
-    from .negatives import md5_long48
-    from .sketches import HLL_M, _hll_rho, hll_estimate
-
-    e = edges.select("src", "dst").distinct()
-    spark = edges.sparkSession
-    n_parts = spark.sparkContext.defaultParallelism
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .repartition(n_parts, "node")
-        .persist()
+    return reduce(
+        DataFrame.unionByName,
+        [
+            est.agg(
+                F.lit(t).cast("long").alias("t"),
+                F.sum("est").cast("long").alias("reach_sum"),
+            )
+            for t, est in enumerate(_hyperball_ests(edges, radius))
+        ],
     )
-    h = md5_long48(F.col("node").cast("string"))
-    regs = nodes.select(
-        "node",
-        (h % F.lit(HLL_M)).cast("long").alias("bucket"),
-        _hll_rho(h).alias("reg"),
-    ).localCheckpoint()
-    e_by_dst = e.repartition(n_parts, "dst").persist()
-
-    def reach_sum(r, t):
-        return hll_estimate(r, ["node"]).agg(
-            F.lit(t).cast("long").alias("t"),
-            F.sum("distinct_est").cast("long").alias("reach_sum"),
-        )
-
-    out = reach_sum(regs, 0)
-    for t in range(1, radius + 1):
-        nbr = e_by_dst.join(
-            regs.withColumnRenamed("node", "dst"), "dst"
-        ).select(F.col("src").alias("node"), "bucket", "reg")
-        regs = (
-            regs.unionByName(nbr)
-            .groupBy("node", "bucket")
-            .agg(F.max("reg").cast("long").alias("reg"))
-            .localCheckpoint()
-        )
-        out = out.unionByName(reach_sum(regs, t))
-    nodes.unpersist()
-    e_by_dst.unpersist()
-    return out
 
 
-def hyperball_neighborhood_oracle_sql(
-    edges_sql: str, radius: int = 3
-) -> str:
-    """DuckDB twin of hyperball_neighborhood: the unrolled register
-    merges of hyperball_oracle_sql, folded to one sum per radius."""
+def _hyperball_twin(edges_sql: str, radius: int) -> str:
+    """The one DuckDB twin of _hyperball_ests: unrolled register
+    max-merges r0..r{radius} and the same exact-BIGINT HLL estimator,
+    ending in the per-node ball estimates b0..b{radius} (node, est).
+    Callers append the final SELECT."""
     from .negatives import md5_long48_sql
     from .sketches import _HLL_DEN, _HLL_NUM, _HLL_RANK_MAX, HLL_M
 
@@ -2190,38 +1996,58 @@ def hyperball_neighborhood_oracle_sql(
     h = md5_long48_sql("CAST(node AS VARCHAR)")
     parts = [
         f"WITH e AS (SELECT DISTINCT src, dst FROM ({edges_sql}))",
-        "nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e)",
+        _NODES_CTE,
         f"""r0 AS (
   SELECT node, ({h}) % {HLL_M} AS bucket,
          CASE WHEN ({h}) // {HLL_M} = 0 THEN {r}
               ELSE {r} - LENGTH(bin(({h}) // {HLL_M})) END AS reg
   FROM nodes)""",
     ]
-
-    def est(tag, src_cte):
-        return f"""{tag} AS (
-  SELECT CAST(SUM(est) AS BIGINT) AS reach_sum FROM (
-    SELECT node,
-           CAST({_HLL_NUM}::BIGINT // ({_HLL_DEN} *
-                (SUM(1::BIGINT << ({r} - reg))
-                 + ({HLL_M} - COUNT(*)) * {1 << r}::BIGINT)) AS BIGINT)
-             AS est
-    FROM {src_cte} GROUP BY node))"""
-
-    parts.append(est("s0", "r0"))
-    for t in range(1, radius + 1):
-        parts.append(
-            f"""r{t} AS MATERIALIZED (
+    for t in range(radius + 1):
+        if t:
+            parts.append(
+                f"""r{t} AS MATERIALIZED (
   SELECT node, bucket, MAX(reg) AS reg FROM (
     SELECT node, bucket, reg FROM r{t - 1}
     UNION ALL
     SELECT e.src AS node, p.bucket, p.reg
     FROM e JOIN r{t - 1} p ON p.node = e.dst)
   GROUP BY node, bucket)"""
+            )
+        parts.append(
+            f"""b{t} AS (
+  SELECT node,
+         CAST({_HLL_NUM}::BIGINT // ({_HLL_DEN} *
+              (SUM(1::BIGINT << ({r} - reg))
+               + ({HLL_M} - COUNT(*)) * {1 << r}::BIGINT)) AS BIGINT)
+           AS est
+  FROM r{t} GROUP BY node)"""
         )
-        parts.append(est(f"s{t}", f"r{t}"))
-    selects = "\nUNION ALL\n".join(
-        f"SELECT CAST({t} AS BIGINT) AS t, reach_sum FROM s{t}"
+    return ",\n".join(parts)
+
+
+def hyperball_oracle_sql(edges_sql: str, radius: int = 3) -> str:
+    """DuckDB twin of hyperball_harmonic."""
+    harm = " + ".join(
+        f"((b{t}.est - b{t - 1}.est) * 1000000) // {t}"
+        for t in range(1, radius + 1)
+    )
+    joins = "".join(
+        f"\nJOIN b{t} ON b{t}.node = b0.node" for t in range(1, radius + 1)
+    )
+    return (
+        _hyperball_twin(edges_sql, radius)
+        + f"\nSELECT b0.node, CAST(b{radius}.est AS BIGINT) AS ball_r,"
+        f" CAST({harm or 0} AS BIGINT) AS harmonic_e6 FROM b0{joins}"
+    )
+
+
+def hyperball_neighborhood_oracle_sql(
+    edges_sql: str, radius: int = 3
+) -> str:
+    """DuckDB twin of hyperball_neighborhood."""
+    return _hyperball_twin(edges_sql, radius) + "\n" + "\nUNION ALL\n".join(
+        f"SELECT CAST({t} AS BIGINT) AS t,"
+        f" CAST(SUM(est) AS BIGINT) AS reach_sum FROM b{t}"
         for t in range(radius + 1)
     )
-    return ",\n".join(parts) + "\n" + selects

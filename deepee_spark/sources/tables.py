@@ -124,7 +124,10 @@ class StageCatalog:
         table (the orchestrator re-run would re-apply a non-idempotent
         merge/append and double its rows). Scans newest-first — replays
         overwhelmingly concern recent commits — over memoized meta
-        reads. Caveat shared with every marker scheme: expire_snapshots
+        reads. The fingerprint lands in the snapshot's meta before the
+        atomic publish rename, so a crash leaves either no snapshot
+        (replay re-applies) or a fingerprinted one (replay skips).
+        Caveat shared with every marker scheme: expire_snapshots
         erases old fingerprints, so retention must outlast the replay
         horizon."""
         for s in reversed(self._snapshots(name)):
@@ -290,7 +293,7 @@ class StageCatalog:
         the counters), so a fingerprint already present anywhere in
         the table's history short-circuits to the current snapshot —
         the same guard the streaming sinks apply per epoch
-        (streaming/ingest._epoch_done)."""
+        (was_committed)."""
         return self._merge(
             spark, delta, name, keys, counters,
             lambda c: F.sum(c).cast("long"), fingerprint,

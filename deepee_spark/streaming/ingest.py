@@ -90,7 +90,7 @@ def stream_facts_to_catalog(
 
     def commit_batch(batch_df: DataFrame, epoch_id: int) -> None:
         fp = f"stream:{source_dir}:epoch={epoch_id}"
-        if _epoch_done(catalog, table, fp):
+        if catalog.was_committed(table, fp):
             return
         catalog.append(batch_df, table, fp)
 
@@ -165,7 +165,7 @@ def stream_arguments_to_catalog(
 
     def commit_batch(batch_df: DataFrame, epoch_id: int) -> None:
         fp = f"stream:{source_dir}:epoch={epoch_id}"
-        if _epoch_done(catalog, table, fp):
+        if catalog.was_committed(table, fp):
             return  # replayed epoch: already committed
         catalog.append(batch_df, table, fp)
 
@@ -214,7 +214,7 @@ def stream_edges_to_catalog(
 
     def commit_batch(batch_df: DataFrame, epoch_id: int) -> None:
         fp = f"stream-edges:{source_dir}:epoch={epoch_id}"
-        if _epoch_done(catalog, table, fp):
+        if catalog.was_committed(table, fp):
             return  # replayed epoch: the merge already happened
         delta = batch_df.select(
             F.concat_ws(
@@ -297,22 +297,6 @@ def stream_host_sessions(
     )
 
 
-def _epoch_done(catalog, table: str, fingerprint: str) -> bool:
-    """True when ANY committed snapshot of `table` carries this epoch's
-    fingerprint. The fingerprint is written inside the snapshot
-    directory BEFORE the atomic publish rename (StageCatalog.write /
-    append), so commit and idempotence marker are indivisible — a crash
-    at any point leaves either no snapshot (replay re-applies cleanly)
-    or a fingerprinted snapshot (replay skips). Scanning history rather
-    than only the latest snapshot keeps the check correct for sinks
-    that interleave commits to multiple tables within one epoch.
-    Delegates to StageCatalog.was_committed, whose newest-first scan
-    over memoized meta reads keeps the per-epoch cost at one meta read
-    per NEW snapshot instead of re-opening every retained snapshot's
-    meta on every micro-batch of a long-lived stream."""
-    return catalog.was_committed(table, fingerprint)
-
-
 def stream_frontier_gate(
     spark: SparkSession,
     source_dir: str,
@@ -347,7 +331,7 @@ def stream_frontier_gate(
         urls = keyed.select(F.col("_cu").alias("v"))
         fp_admit = f"stream-frontier:{source_dir}:epoch={epoch_id}"
         fp_bloom = f"stream-frontier:{source_dir}:bloom:epoch={epoch_id}"
-        if not _epoch_done(catalog, admitted_table, fp_admit):
+        if not catalog.was_committed(admitted_table, fp_admit):
             try:
                 bitmap = catalog.read(spark, bloom_table).select(
                     "word_idx", "word"
@@ -360,7 +344,7 @@ def stream_frontier_gate(
                 admitted_table,
                 fp_admit,
             )
-        if not _epoch_done(catalog, bloom_table, fp_bloom):
+        if not catalog.was_committed(bloom_table, fp_bloom):
             catalog.merge_bitmap(
                 spark,
                 bloom_build(urls, "v", m_bits, k),
@@ -410,7 +394,7 @@ def stream_cms_to_catalog(
 
     def commit_batch(batch_df: DataFrame, epoch_id: int) -> None:
         fp = f"stream-cms:{source_dir}:epoch={epoch_id}"
-        if _epoch_done(catalog, table, fp):
+        if catalog.was_committed(table, fp):
             return
         toks = documents_stage(batch_df).select(
             F.explode(F.split(F.col("text"), r"\s+")).alias("token")
@@ -434,7 +418,7 @@ def stream_cms_to_catalog(
     if available_now:
         q = writer.trigger(availableNow=True).start()
         q.awaitTermination()
-        return None
+        return q
     return writer.start()
 
 
@@ -481,7 +465,7 @@ def stream_semantic_dedup(
     def commit_batch(batch_df: DataFrame, epoch_id: int) -> None:
         fp_kept = f"stream-semdedup:{source_dir}:kept:epoch={epoch_id}"
         fp_hist = f"stream-semdedup:{source_dir}:hist:epoch={epoch_id}"
-        if not _epoch_done(catalog, kept_table, fp_kept):
+        if not catalog.was_committed(kept_table, fp_kept):
             try:
                 hist = catalog.read(spark, history_table).select(
                     "vec_id", "embedding"
@@ -503,7 +487,7 @@ def stream_semantic_dedup(
                 "left_semi",
             )
             catalog.append(kept, kept_table, fp_kept)
-        if not _epoch_done(catalog, history_table, fp_hist):
+        if not catalog.was_committed(history_table, fp_hist):
             catalog.append(batch_df, history_table, fp_hist)
 
     emb = (

@@ -1445,3 +1445,103 @@ def test_pagerank_warm_start_band_equivalent_and_faster(spark):
     assert cold.count() == warm.count() == 122
     # warm start saves rounds on a drop-sized delta
     assert rounds_warm < rounds_cold, (rounds_warm, rounds_cold)
+
+
+def _pagerank_weighted_py(rows, iters=3):
+    """Pure-python weighted recurrence: multi-edges summed, rank split
+    by weight ((rank * w) div outw)."""
+    w = defaultdict(int)
+    for a, b, x in rows:
+        w[(a, b)] += x
+    nodes = sorted({a for a, _ in w} | {b for _, b in w})
+    r0 = PR_SCALE // len(nodes)
+    tp = (15 * r0) // 100
+    outw = defaultdict(int)
+    for (a, _), x in w.items():
+        outw[a] += x
+    rank = {v: r0 for v in nodes}
+    for _ in range(iters):
+        s = defaultdict(int)
+        for (a, b), x in w.items():
+            s[b] += (rank[a] * x) // outw[a]
+        rank = {v: tp + (85 * s[v]) // 100 for v in nodes}
+    return rank
+
+
+def test_pagerank_oracles_are_deterministic():
+    """The DuckDB PageRank twins must give ONE answer under DuckDB's
+    multi-threaded execution. With the shared edge CTE inlined, the
+    same query over this 9000-edge table returned a different rank set
+    in a few percent of runs, so each twin is run 200 times and every
+    run must equal the pure-python recurrence. Spark-free."""
+    from deepee_spark.operators.graph import pagerank_weighted_oracle_sql
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE syn AS SELECT 'user#' || i AS src,"
+        " 'item#' || ((i * 7919 + j * 104729) % 100) AS dst,"
+        " CAST(1 + (i + j) % 5 AS BIGINT) AS weight"
+        " FROM range(150) t(i), range(60) s(j)"
+    )
+    rows = con.execute("SELECT src, dst, weight FROM syn").fetchall()
+    cases = [
+        (
+            pagerank_oracle_sql("SELECT src, dst FROM syn", iters=3),
+            _pagerank_py([(a, b) for a, b, _ in rows]),
+        ),
+        (
+            pagerank_weighted_oracle_sql(
+                "SELECT src, dst, weight FROM syn", iters=3
+            ),
+            _pagerank_weighted_py(rows),
+        ),
+    ]
+    for sql, want in cases:
+        for run in range(200):
+            assert dict(con.execute(sql).fetchall()) == want, run
+
+
+def test_graph_family_variants_agree(spark, edges):
+    """Each family's variants share one loop, so their degenerate
+    settings must coincide exactly: unit weights, every node a seed and
+    a never-met tolerance reduce to pagerank_int; bfs_distances is the
+    per-node min of bfs_per_seed; N(radius) is the sum of the per-node
+    ball estimates."""
+    import pyspark.sql.functions as F
+
+    from deepee_spark.operators.graph import (
+        bfs_per_seed,
+        hyperball_harmonic,
+        hyperball_neighborhood,
+        pagerank_int_converged,
+        pagerank_int_seeded,
+        pagerank_int_weighted,
+    )
+
+    def ranks(df):
+        return {r.node: r.rank for r in df.collect()}
+
+    want = ranks(pagerank_int(edges, iters=3))
+    assert ranks(
+        pagerank_int_weighted(edges.withColumn("weight", F.lit(1)), iters=3)
+    ) == want
+    all_nodes = edges.select(F.col("src").alias("node")).union(
+        edges.select("dst")
+    )
+    assert ranks(pagerank_int_seeded(edges, all_nodes, iters=3)) == want
+    conv, rounds, converged = pagerank_int_converged(
+        edges, max_iters=3, tol_units=-1
+    )
+    assert (ranks(conv), rounds, converged) == (want, 3, False)
+
+    seeds = spark.createDataFrame([(0,), (1,), (17,)], "node: long")
+    per_seed = defaultdict(list)
+    for r in bfs_per_seed(edges, seeds, max_hops=2).collect():
+        per_seed[r.node].append(r.dist)
+    assert {
+        r.node: r.dist for r in bfs_distances(edges, seeds, 2).collect()
+    } == {n: min(d) for n, d in per_seed.items()}
+
+    n_t = {r.t: r.reach_sum for r in hyperball_neighborhood(edges, 2).collect()}
+    balls = hyperball_harmonic(edges, radius=2).agg(F.sum("ball_r"))
+    assert n_t[2] == balls.collect()[0][0]

@@ -303,7 +303,7 @@ def test_pagerank_iteration_avoids_sortmerge(spark):
     # per-iteration joins
     links = e.join(outdeg.hint("shuffle_hash"), "src")
     rank = nodes.select("node", F.lit(PR_SCALE // 50).cast("long").alias("rank"))
-    plan = formatted_plan(_pr_iteration(links, rank, nodes, 1000, 85))
+    plan = formatted_plan(_pr_iteration(links, rank, nodes, 1000))
     assert "SortMergeJoin" not in plan, plan
     assert plan.count("ShuffledHashJoin") >= 2, plan
 

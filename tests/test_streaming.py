@@ -523,7 +523,9 @@ def test_stream_cms_merge_maintains_live_sketch(spark, tmp_path):
     docs = corpus_df(spark, 40)
     even = "CAST(regexp_extract(url, '([0-9]+)$', 1) AS INT) % 2 = 0"
     docs.filter(even).write.mode("append").parquet(src)
-    stream_cms_to_catalog(spark, src, cat, ckpt)
+    q = stream_cms_to_catalog(spark, src, cat, ckpt)
+    # the drained availableNow query comes back, like the other sinks'
+    assert not q.isActive and q.exception() is None
     assert cat.read(spark, "cms_live").count() > 0
 
     docs.filter(f"NOT ({even})").write.mode("append").parquet(src)
