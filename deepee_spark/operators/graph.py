@@ -571,8 +571,11 @@ def _pagerank_twin(
         "ns AS (SELECT COUNT(*) AS n FROM sd)",
         "ow AS (SELECT src, CAST(SUM(w) AS BIGINT) AS outw"
         " FROM e GROUP BY src)",
-        f"r0 AS MATERIALIZED (SELECT nodes.node,"
-        f" CAST(CASE WHEN sd.node IS NULL THEN 0"
+        # a graph with no seed in it raises, like _pagerank
+        "r0 AS MATERIALIZED (SELECT nodes.node,"
+        " CAST(CASE WHEN ns.n = 0"
+        " THEN error('no seed intersects the graph''s node set')"
+        " WHEN sd.node IS NULL THEN 0"
         f" ELSE {PR_SCALE} // ns.n END AS BIGINT) AS rank,"
         f" CAST(CASE WHEN sd.node IS NULL THEN 0"
         f" ELSE ({100 - DAMPING_PCT} * ({PR_SCALE} // ns.n)) // 100"
@@ -1476,7 +1479,7 @@ reach(a, b) AS (
   UNION
   SELECT r.a, e.dst FROM reach r JOIN e ON r.b = e.src
 ),
-nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
+{_NODES_CTE},
 mutual AS (
   SELECT r1.a AS node, r1.b AS partner
   FROM reach r1 JOIN reach r2 ON r1.a = r2.b AND r1.b = r2.a

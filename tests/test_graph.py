@@ -369,6 +369,17 @@ def test_pagerank_seeded_exact(spark, edges):
     )
     assert dict(con.execute(sql).fetchall()) == rank
 
+    # a seed list that misses the graph entirely raises on both engines
+    off = spark.createDataFrame([(99,)], "node: long")
+    with pytest.raises(ValueError):
+        pagerank_int_seeded(edges, off, iters=3)
+    with pytest.raises(duckdb.InvalidInputException):
+        con.execute(
+            pagerank_seeded_oracle_sql(
+                "SELECT src, dst FROM et", "SELECT 99 AS node", iters=3
+            )
+        ).fetchall()
+
 
 def test_resource_allocation_bruteforce(spark, edges):
     from deepee_spark.operators.graph import resource_allocation
